@@ -30,6 +30,7 @@ from radares_spark.io.fetcher import fetch_reports, login
 from radares_spark.pipeline.audit import TOTAL_EQUIP, completeness_audit
 from radares_spark.pipeline.backfill import backfill_plan
 from radares_spark.pipeline.run_log import append_run_log, fetch_run_log
+from radares_spark.pipeline.state_ledger import LedgerState
 from radares_spark.streaming.ingest_stream import run_ingest_stream
 
 
@@ -415,8 +416,8 @@ def cmd_snapshot_diff(
 def cmd_corpus_refresh(
     spark: SparkSession,
     docs_path: str,
-    state_out,
-    state_in=None,
+    state_out: LedgerState,
+    state_in: LedgerState | None = None,
     store_dir: str | None = None,
     postings_dir: str | None = None,
     ivf_dir: str | None = None,
@@ -427,9 +428,12 @@ def cmd_corpus_refresh(
     jaccard_threshold: float = 0.8,
     max_bucket: int | None = None,
 ) -> dict[str, int]:
-    """Nightly incremental curation (pipeline/refresh.py): without
-    ``--state-in`` runs the night-zero batch (init_state); with it,
-    refreshes only the delta against the prior night's state. One
+    """Nightly incremental curation (pipeline/refresh.py) over the
+    delta state ledger: ``--state-ledger DIR --epoch N`` maps to
+    ``state_out = LedgerState(DIR, N)`` and, for N > 0,
+    ``state_in = LedgerState(DIR, N - 1)``. Epoch 0 (no ``state_in``)
+    runs the night-zero batch (init_state); a later epoch refreshes
+    only the delta against the prior epoch's view. One
     snapshot diff then carries every serving store the caller opted
     into: ``--store`` (kept-corpus parquet, churned-doc-bucket
     rewrites), ``--postings-store`` (BM25 inverted index, touched-term
@@ -445,7 +449,7 @@ def cmd_corpus_refresh(
     TONIGHT'S docs only (not a full snapshot) and the refresh runs
     against the virtual snapshot ``kept_store ∖ tonight ∪ tonight``
     via ``refresh_night`` — no corpus-sized write, read or hash
-    (requires ``--state-in`` and ``--store``; every store apply then
+    (requires ``--epoch`` > 0 and ``--store``; every store apply then
     sources stable text through pruned kept-store point reads).
 
     The four curation knobs (``keep_langs/sample_pct/
@@ -473,7 +477,7 @@ def cmd_corpus_refresh(
         )
     if delta_direct and not (state_in and store_dir):
         raise ValueError(
-            "--delta-direct requires --state-in and --store: the virtual "
+            "--delta-direct requires --epoch > 0 and --store: the virtual "
             "snapshot is tonight's docs plus the kept store's residents"
         )
     knobs = dict(
@@ -901,9 +905,7 @@ def _corpus_nightly_run(
         nights/<night>/               kept/ audit/ url_audit/
         state_ledger/                 refresh state, ONE epoch-delta
                                       ledger (night N appends only its
-                                      changed rows as epoch=N; roots
-                                      predating it keep their rotated
-                                      state/<night>/ dirs)
+                                      changed rows as epoch=N)
         kept_store/ postings_store/ ivf_store/   serving stores
         tokenizer/ shards/            frozen artifact + shard store
         night_log                     completed nights, written LAST
@@ -1020,26 +1022,13 @@ def _corpus_nightly_run(
             "concurrently; if that run is dead, delete the claim file "
             "and re-run"
         )
-    # refresh state: NEW roots use the delta state ledger (one epoch
-    # appended per night, r10 verdict #1); roots that already rotate
-    # state/<night>/ dirs keep doing so — the two layouts share every
-    # code path below via the refresh layer's str|LedgerState dispatch
-    # resolved through the pointer log: corpus-reinit swaps in a fresh
-    # ledger (state_ledger.m<k>) when the curation knobs change
+    # refresh state: the delta state ledger, one epoch appended per
+    # night (r10 verdict #1), resolved through the pointer log:
+    # corpus-reinit swaps in a fresh ledger (state_ledger.m<k>) when
+    # the curation knobs change
     state_led = resolve_store(spark, root_dir, "state_ledger")
-    legacy_state = not iofs.has_parquet(spark, state_led) and iofs.has_parquet(
-        spark, os.path.join(root_dir, "state")
-    )
-    if legacy_state:
-        prior_state = (
-            os.path.join(root_dir, "state", done[-1]) if done else None
-        )
-        state_dir = os.path.join(root_dir, "state", night)
-    else:
-        from radares_spark.pipeline.state_ledger import LedgerState
-
-        prior_state = LedgerState(state_led, len(done) - 1) if done else None
-        state_dir = LedgerState(state_led, len(done))
+    prior_state = LedgerState(state_led, len(done) - 1) if done else None
+    state_dir = LedgerState(state_led, len(done))
 
     _check_root_lease(root_dir)  # next: crawl mutates ledgers/out_dir
     counts = cmd_crawl_nightly(
@@ -1293,136 +1282,13 @@ def cmd_ivf_retrain(
 def cmd_nightly_verify(spark: SparkSession, root_dir: str) -> dict:
     """Cross-store consistency audit for a corpus-nightly root
     (``pipeline/nightly_audit.py``): the night log vs every store's
-    own completion evidence — URL/content ledger epochs, rotated
-    refresh states + knobs, kept/IVF/postings id sets, shard-store
+    own completion evidence — URL/content ledger epochs, the refresh
+    state ledger + knobs, kept/IVF/postings id sets, shard-store
     night tags (read through the pointer log). Exit code 1 on any
     divergence; the operator-facing counterpart of shards-verify."""
     from radares_spark.pipeline.nightly_audit import verify_nightly_root
 
     return verify_nightly_root(spark, root_dir)
-
-
-def _migrate_legacy_state(spark: SparkSession, root_dir: str) -> dict:
-    """corpus-maintain --migrate-state: move a legacy root's rotated
-    ``state/<night>/`` dirs onto the delta state ledger under the
-    SAME knobs (r11 verdict #1 — corpus-reinit only covers the
-    knobs-change path, so pre-ledger deployments had no supported
-    move off the O(corpus)-per-night rewrite).
-
-    Steps, ordered for the crash contract: (1) land the LAST
-    completed night's features/bands/audit as the base epoch
-    ``n_nights - 1`` of a fresh ``state_ledger.m<k>`` candidate (a
-    partial rerun overwrites — write_state_epoch clears its epoch
-    partition first and the knobs write is an overwrite); (2) flip
-    the ``state_ledger`` pointer (the atomic adoption point — the
-    next night reads the ledger as "last night's state" and appends
-    only its delta); (3) archive the rotated dirs to
-    ``state_archived_pre_ledger/`` (history preserved, the unbounded
-    per-night retention ended). A rerun after the flip completes only
-    the archive step; a rerun after completion fails fast."""
-    from radares_spark.io import fs as iofs
-    from radares_spark.pipeline.state_ledger import (
-        STATE_TABLES,
-        LedgerState,
-        write_state_epoch,
-    )
-    from radares_spark.pipeline.stores import (
-        flip_stores,
-        next_flip_index,
-        resolve_store,
-    )
-
-    log = os.path.join(root_dir, "night_log")
-    if not iofs.has_parquet(spark, log):
-        raise ValueError(
-            "--migrate-state needs a completed root (night log missing) — "
-            "a fresh root gets the delta ledger from its first "
-            "corpus-nightly automatically"
-        )
-    done = [
-        r["night"] for r in spark.read.parquet(log).orderBy("idx").collect()
-    ]
-    legacy_root = os.path.join(root_dir, "state")
-    archive = os.path.join(root_dir, "state_archived_pre_ledger")
-    cur_led = resolve_store(spark, root_dir, "state_ledger")
-    if iofs.has_parquet(spark, cur_led):
-        if iofs.is_dir(spark, legacy_root):
-            # crashed between flip and archive: finish the archive
-            if iofs.is_dir(spark, archive):
-                # both dirs present can only mean manual surgery (the
-                # tool archives exactly once, post-flip) — fail with
-                # the remedy instead of fs.rename's bare refusal
-                raise ValueError(
-                    f"--migrate-state: both {legacy_root!r} and its "
-                    f"archive {archive!r} exist — this migration "
-                    "already completed and state/ was recreated by "
-                    "hand; remove or rename one of the two dirs "
-                    "(the serving truth is the delta state ledger "
-                    f"{cur_led!r}; neither dir is read) and re-run"
-                )
-            iofs.rename(spark, legacy_root, archive)
-            return {"state_migrated": 0, "state_archive_completed": 1}
-        raise ValueError(
-            "--migrate-state: this root already serves the delta state "
-            f"ledger ({cur_led!r}) and has no rotated state/ dirs — "
-            "nothing to migrate"
-        )
-    # ANY state dir the night log does not record is a crashed night
-    # ahead of the log (its partial dir would be archived wholesale and
-    # its replay would then run ledger-mode over a base that never saw
-    # it) — fail fast, matching the replay-first contract below (r12
-    # verdict #4: previously only the features-missing case tripped).
-    unlogged = sorted(
-        n for n in iofs.list_names(spark, legacy_root)
-        if n not in done and not n.startswith("_")
-    )
-    if unlogged:
-        raise ValueError(
-            f"--migrate-state: state dir(s) {unlogged!r} under "
-            f"{legacy_root!r} are not in the night log ({done!r}) — a "
-            "crashed night is ahead of the log; replay it under its "
-            "original tag (corpus-nightly completes it and logs it), "
-            "then migrate"
-        )
-    last_dir = os.path.join(legacy_root, done[-1])
-    if not iofs.has_parquet(spark, os.path.join(last_dir, "features")):
-        raise ValueError(
-            f"--migrate-state: last completed night's state {last_dir!r} "
-            "is missing its features table — run nightly-verify; a "
-            "crashed night must be replayed before migrating"
-        )
-    base_epoch = len(done) - 1
-    new_led = LedgerState(
-        os.path.join(
-            root_dir, f"state_ledger.m{next_flip_index(spark, root_dir)}"
-        ),
-        base_epoch,
-    )
-    n_rows = 0
-    for table in STATE_TABLES:
-        tdir = os.path.join(last_dir, table)
-        if not iofs.has_parquet(spark, tdir):
-            continue
-        full = spark.read.parquet(tdir)
-        write_state_epoch(
-            spark, new_led, table, full, full.select("doc_id").limit(0)
-        )
-        n_rows += spark.read.parquet(new_led.table_dir(table)).count()
-    knobs = os.path.join(last_dir, "knobs")
-    if iofs.has_parquet(spark, knobs):
-        spark.read.parquet(knobs).repartition(1).write.mode(
-            "overwrite"
-        ).parquet(f"{new_led.ledger_dir}/knobs")
-    flip_idx = flip_stores(
-        spark, root_dir, {"state_ledger": new_led.ledger_dir}
-    )
-    iofs.rename(spark, legacy_root, archive)
-    return {
-        "state_migrated": 1,
-        "state_base_epoch": base_epoch,
-        "state_rows_landed": n_rows,
-        "state_flip_idx": flip_idx,
-    }
 
 
 def cmd_corpus_maintain(spark: SparkSession, root_dir: str, **kwargs) -> dict:
@@ -1453,7 +1319,6 @@ def _corpus_maintain_run(
     compact_shards: bool = False,
     compact_states: bool = False,
     prune_nights: int | None = None,
-    migrate_state: bool = False,
 ) -> dict:
     """Periodic artifact maintenance for a corpus-nightly root — the
     composition that CONSUMES the maintenance telemetry and finishes
@@ -1471,20 +1336,6 @@ def _corpus_maintain_run(
       no-ops), then flips ``shards`` AND ``tokenizer`` in ONE pointer
       append — the pair can never be observed half-swapped.
 
-    - ``--migrate-state`` moves a LEGACY root (rotated
-      ``state/<night>/`` dirs — the pre-ledger layout) onto the delta
-      state ledger under its EXISTING knobs: the last completed
-      night's state tables land as the base epoch ``n_nights - 1`` of
-      a fresh ``state_ledger.m<k>``, the knobs meta travels with
-      them, the ``state_ledger`` pointer flips, and the rotated dirs
-      are archived to ``state_archived_pre_ledger/``. The next night
-      then appends only its delta epoch — without this, a pre-ledger
-      root keeps paying the full O(corpus) state rewrite nightly and
-      retains every night's copy forever (``corpus-reinit`` covers
-      only the knobs-CHANGE path; it refuses identical knobs). A
-      crash before the flip leaves the rotated dirs serving (rerun
-      rebuilds the candidate deterministically); a crash after it
-      leaves only the archive step, which the rerun completes.
     - ``--compact-states`` folds the delta state ledger's completed
       per-night epochs into its ``epoch=-1`` base
       (``pipeline/state_ledger.compact_state_ledger``): the fold is
@@ -1539,12 +1390,6 @@ def _corpus_maintain_run(
     if ivf not in ("auto", "force", "skip"):
         raise ValueError(f"--ivf must be auto|force|skip, got {ivf!r}")
     counts: dict = {}
-
-    if migrate_state:
-        _check_root_lease(root_dir)
-        # runs FIRST so --migrate-state --compact-states composes: the
-        # compaction below resolves the freshly flipped ledger
-        counts.update(_migrate_legacy_state(spark, root_dir))
 
     if ivf != "skip":
         cur = resolve_store(spark, root_dir, "ivf_store")
@@ -1640,13 +1485,6 @@ def _corpus_maintain_run(
         from radares_spark.pipeline.state_ledger import compact_state_ledger
 
         led = resolve_store(spark, root_dir, "state_ledger")
-        if not iofs.has_parquet(spark, led):
-            raise ValueError(
-                "--compact-states requires the delta state ledger "
-                f"({led!r}); a legacy root's rotated state/<night>/ dirs "
-                "have no epochs to fold — prune them by deleting old "
-                "night dirs (keep the last) instead"
-            )
         log = os.path.join(root_dir, "night_log")
         n_done = (
             spark.read.parquet(log).count()
@@ -1763,7 +1601,6 @@ def _corpus_reinit_run(
         init_state,
         init_store,
     )
-    from radares_spark.pipeline.state_ledger import LedgerState
     from radares_spark.pipeline.stores import (
         flip_stores,
         next_flip_index,
@@ -1952,13 +1789,13 @@ def main(argv: list[str] | None = None) -> int:
     cc.add_argument("--max-per-domain", type=int, default=None)
     cr = sub.add_parser("corpus-refresh")
     cr.add_argument("--docs", required=True, help="tonight's snapshot parquet (with --delta-direct: tonight's NEW docs only)")
-    cr.add_argument("--state-out", required=True, help="dir for tonight's state")
-    cr.add_argument("--state-in", default=None, help="prior night's state dir (omit for night zero)")
+    cr.add_argument("--state-ledger", required=True, help="delta state ledger dir (pipeline/state_ledger.py)")
+    cr.add_argument("--epoch", type=int, required=True, help="tonight's epoch: 0 batch-curates night zero into the ledger, N refreshes epoch N-1 -> N")
     cr.add_argument("--store", default=None, help="optional kept-corpus parquet to maintain incrementally")
     cr.add_argument("--postings-store", default=None, help="optional BM25 postings index to maintain incrementally (requires --store)")
     cr.add_argument("--ivf-store", default=None, help="optional IVF ANN vector store to maintain incrementally")
     cr.add_argument("--night", default=None, help="idempotency tag for the postings apply: a completed night's re-run is a no-op (the kept/IVF applies are rerun-idempotent by construction)")
-    cr.add_argument("--delta-direct", action="store_true", help="O(delta)-I/O nightly mode: --docs is tonight's docs only and the refresh runs against the virtual snapshot kept-store∖tonight∪tonight (requires --state-in and --store)")
+    cr.add_argument("--delta-direct", action="store_true", help="O(delta)-I/O nightly mode: --docs is tonight's docs only and the refresh runs against the virtual snapshot kept-store∖tonight∪tonight (requires --epoch > 0 and --store)")
     cr.add_argument("--max-bucket", type=int, default=None, help="hot-LSH-bucket cap (state knob; the 100TB boilerplate guard)")
     _add_refresh_knobs(cr)
     sd = sub.add_parser("snapshot-diff")
@@ -2002,7 +1839,6 @@ def main(argv: list[str] | None = None) -> int:
     cm.add_argument("--compact-shards", action="store_true", help="fold the shard store's per-night epoch partitions into one epoch=-1 partition in a NEW store (~128MiB files), then flip the pointer — content-identical: meta/frontier/tags carried, verify and exports unchanged")
     cm.add_argument("--compact-states", action="store_true", help="fold the delta state ledger's completed per-night epochs into its epoch=-1 base (night-log gated: a crashed night's epoch never folds); bounds state retention to one base + the epochs since the last fold")
     cm.add_argument("--prune-nights", type=int, default=None, metavar="K", help="delete the nights/<night>/ output dirs of all but the last K COMPLETED nights (pure audit archive once logged; un-logged dirs are never touched)")
-    cm.add_argument("--migrate-state", action="store_true", help="move a pre-ledger root's rotated state/<night>/ dirs onto the delta state ledger under the SAME knobs: last night's state lands as the ledger base epoch, the pointer flips, the dirs archive — the next night appends only its delta")
     ri = sub.add_parser("corpus-reinit")
     ri.add_argument("--root", required=True, help="corpus-nightly pipeline root")
     _add_refresh_knobs(ri)
@@ -2059,6 +1895,8 @@ def main(argv: list[str] | None = None) -> int:
         args.initial and args.final
     ):
         p.error("backload requires -i/--initial AND -f/--final (or -l)")
+    if args.cmd == "corpus-refresh" and args.epoch < 0:
+        p.error("corpus-refresh requires --epoch >= 0")
 
     spark = get_spark("radares-spark-cli")
     if args.cmd == "tokenizer-train":
@@ -2095,7 +1933,6 @@ def main(argv: list[str] | None = None) -> int:
             compact_shards=args.compact_shards,
             compact_states=args.compact_states,
             prune_nights=args.prune_nights,
-            migrate_state=args.migrate_state,
         )
         _print_sorted(counts)
         return 0
@@ -2142,7 +1979,9 @@ def main(argv: list[str] | None = None) -> int:
         return 0
     if args.cmd == "corpus-refresh":
         counts = cmd_corpus_refresh(
-            spark, args.docs, args.state_out, args.state_in, args.store,
+            spark, args.docs, LedgerState(args.state_ledger, args.epoch),
+            LedgerState(args.state_ledger, args.epoch - 1) if args.epoch else None,
+            args.store,
             args.postings_store, args.ivf_store, args.night,
             delta_direct=args.delta_direct, max_bucket=args.max_bucket,
             **_knob_kwargs(args),

@@ -28,6 +28,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from radares_spark.io.tables import load_table
 from radares_spark.operators.dedup import NORM_SQL, _md5, normalize_text
@@ -64,12 +65,12 @@ def hashed_tf(
     text_col: str = "text",
 ) -> DataFrame:
     """(doc_id, embedding array<double>) — L2-normalized hashed
-    bag-of-words vectors. Docs with no tokens (empty normalized text)
-    AND docs whose raw vector has zero norm (all-ubiquitous tokens
-    under tf_idf — every IDF weight 0 — or full sign cancellation) are
-    DROPPED: a zero vector poisons every cosine, the same rule
-    ``embedding_store_health`` audits. Preserve a doc spine downstream
-    with a left join."""
+    bag-of-words vectors; ``doc_id`` keeps its input type. Docs with no
+    tokens (empty normalized text) AND docs whose raw vector has zero
+    norm (all-ubiquitous tokens under tf_idf — every IDF weight 0 — or
+    full sign cancellation) are DROPPED: a zero vector poisons every
+    cosine, the same rule ``embedding_store_health`` audits. Preserve a
+    doc spine downstream with a left join."""
     norm = normalize_text(F.coalesce(F.col(text_col), F.lit("")))
     toks = (
         docs.select("doc_id", norm.alias("__t"))
@@ -150,9 +151,15 @@ def hashed_tf(
     # docstring forbids and embedding_store_health flags — reachable
     # via all-ubiquitous-token docs under tf_idf (every IDF weight 0)
     # or full sign cancellation under plain TF).
-    return split.mapInArrow(
-        _dense_unit_assemble(dim), "doc_id long, embedding array<double>"
+    # doc_id passes through with the caller's type (bigint, int,
+    # string, ...): the kernel filters the input Arrow column itself
+    out = T.StructType(
+        [
+            T.StructField("doc_id", docs.schema["doc_id"].dataType),
+            T.StructField("embedding", T.ArrayType(T.DoubleType())),
+        ]
     )
+    return split.mapInArrow(_dense_unit_assemble(dim), out)
 
 
 def _dense_unit_assemble(dim: int):
@@ -196,7 +203,7 @@ def _dense_unit_assemble(dim: int):
             n = batch.num_rows
             if not n:
                 continue
-            did = batch.column("doc_id").to_numpy(zero_copy_only=False)
+            did = batch.column("doc_id")
             ii_arr = batch.column("ii")
             xx_arr = batch.column("xx")
             # ListArray internals: one contiguous values buffer + an
@@ -246,7 +253,7 @@ def _dense_unit_assemble(dim: int):
                     pa.array(mat.ravel(), type=pa.float64()),
                 )
                 yield pa.RecordBatch.from_arrays(
-                    [pa.array(did[a:b][ok], type=pa.int64()), emb],
+                    [did.slice(a, m).filter(pa.array(ok)), emb],
                     names=["doc_id", "embedding"],
                 )
 

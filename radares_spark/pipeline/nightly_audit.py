@@ -4,9 +4,9 @@ shards-verify, one level up).
 
 The night log is the root's source of truth for completed nights; every
 store underneath keeps its own completion evidence (URL/content ledger
-epochs, refresh state dirs, shards/postings night-tag sets, the pointer
-log). A crash, a foreign store dropped into the root, or a manually
-mangled log each leave those records DISAGREEING — this audit
+epochs, the refresh state ledger, shards/postings night-tag sets, the
+pointer log). A crash, a foreign store dropped into the root, or a
+manually mangled log each leave those records DISAGREEING — this audit
 cross-checks them all and reports one named flag per invariant,
 ``ok`` only when every flag passes:
 
@@ -21,15 +21,15 @@ cross-checks them all and reports one named flag per invariant,
   are contiguous from zero with at most one per completed night
   (a zero-admission night appends none), and content-ledger epoch
   numbers — which track the url ledger's — are a subset of them;
-- ``states_present``: the refresh state is intact — for a delta state
-  ledger (``state_ledger/``): the tables exist, every per-night epoch
-  maps to a logged night (one allowed AHEAD as crash state), and the
-  compaction floor never exceeds the completed nights; for legacy
-  rotated ``state/<night>`` dirs: every completed night's dir is on
-  disk;
-- ``knobs_uniform``: every state records the SAME curation knobs
-  (mixed-knob states would mean carried outcomes under two semantics;
-  the ledger holds one knobs meta by construction);
+- ``states_present``: the delta state ledger (``state_ledger/``,
+  resolved through the pointer log) is intact — its tables exist,
+  every per-night epoch maps to a logged night (one allowed AHEAD as
+  crash state), and the compaction floor never exceeds the completed
+  nights; a root with no ledger passes only while its night log is
+  empty;
+- ``knobs_uniform``: the ledger records its curation knobs meta (one
+  copy per ledger by construction, so the knobs cannot be mixed —
+  without it carried outcomes have no provable semantics);
 - ``kept_matches_state``: the kept store's resident ids are exactly
   the last state's KEPT audit rows;
 - ``ivf_matches_kept`` / ``postings_count_matches``: the ANN store's
@@ -202,22 +202,8 @@ def verify_nightly_root(spark: SparkSession, root_dir: str) -> dict:
         }
         checks["content_epochs_match"] = con_pos <= set(url_pos)
 
-    # --- refresh state: per-night dirs (legacy) or the delta ledger ----
-    # knobs are only required where they exist: states predating the
-    # knobs meta are explicitly tolerated by the refresh layer
-    # (_check_knobs skips them), so the audit must not out-strict the
-    # code that writes the state
+    # --- refresh state: the delta state ledger ------------------------
     state_led = resolve_store(spark, root_dir, "state_ledger")
-    # `state_archived_pre_ledger/` is minted exactly once, by a
-    # completed --migrate-state whose pointer flip landed the serving
-    # ledger FIRST — so an archive with NO serving ledger is manual
-    # surgery (ledger dir deleted, pointer log edited): the rotated
-    # history was retired but nothing serves (r12 verdict #6). Healthy
-    # migrated roots (archive + ledger) stay silent.
-    if iofs.is_dir(
-        spark, os.path.join(root_dir, "state_archived_pre_ledger")
-    ) and not iofs.has_parquet(spark, state_led):
-        checks["state_archive_consistent"] = False
     last_audit = None  # the audit view the kept store must match
     if iofs.has_parquet(spark, state_led):
         from radares_spark.pipeline.state_ledger import (
@@ -259,22 +245,9 @@ def verify_nightly_root(spark: SparkSession, root_dir: str) -> dict:
                 spark, LedgerState(state_led, len(nights) - 1), "audit"
             )
     else:
-        states_ok, knob_rows = True, []
-        for n in nights:
-            sd = os.path.join(root_dir, "state", n)
-            parts_ok = all(
-                iofs.has_parquet(spark, f"{sd}/{p}") for p in ("features", "audit")
-            )
-            states_ok = states_ok and parts_ok
-            if parts_ok and iofs.has_parquet(spark, f"{sd}/knobs"):
-                knob_rows.append(tuple(spark.read.parquet(f"{sd}/knobs").head()))
-        checks["states_present"] = states_ok
-        if knob_rows:
-            checks["knobs_uniform"] = len(set(knob_rows)) == 1
-        if states_ok and nights:
-            last_audit = spark.read.parquet(
-                os.path.join(root_dir, "state", nights[-1], "audit")
-            )
+        # every completed night lands state, so a logged night without
+        # a ledger means the state is gone
+        checks["states_present"] = not nights
 
     # --- kept store vs the last state's audit --------------------------
     kept = None  # lazy (doc_id) frame — compared via anti-joins, never collected

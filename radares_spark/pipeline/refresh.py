@@ -27,19 +27,21 @@ outcomes.  The refreshed audit is EQUIVALENT to running batch
 tests/test_refresh.py across keeper-resurrection, bucket-churn,
 partner-removal and randomized three-night scenarios.
 
-State layout (parquet under a state dir):
-``features/`` (doc_id, text_hash, raw_hash, quality_pass, pred_lang,
-exact_keep) · ``bands/`` (doc_id, band, band_hash — stage-alive docs
-only) · ``audit/`` (doc_id, outcome).  Each refresh writes a NEW
-state dir (caller rotates nightly dirs; write-new-then-swap is the
-crash-safety story, as with ledger epochs).
+State layout: the delta state ledger (pipeline/state_ledger.py), one
+root holding three epoch-partitioned tables — ``features/``
+(doc_id, text_hash, raw_hash, quality_pass, pred_lang, exact_keep) ·
+``bands/`` (doc_id, band, band_hash — stage-alive docs only) ·
+``audit/`` (doc_id, outcome). Every entry point takes a
+:class:`LedgerState` (ledger dir + epoch); night N writes ONLY its
+changed rows and tombstones as ``epoch=N``, so the state write
+scales with the delta, never the corpus.
 
 The curation knobs (keep_langs, sample_pct, jaccard_threshold,
 max_bucket) must match across nights — they are part of the state's
-meaning, so ``init_state``/``refresh`` land them in a one-row
-``knobs`` meta under the state dir and ``refresh`` FAILS FAST when
-the caller's knobs differ from the state's (silently mixing
-semantics would corrupt every carried outcome).
+meaning, so ``init_state`` lands them in a one-row ``knobs`` meta at
+the ledger root and ``refresh`` FAILS FAST when the caller's knobs
+differ from the state's, or when the meta is missing (silently
+mixing semantics would corrupt every carried outcome).
 
 ``max_bucket`` hot-bucket capping (the 100 TB guard against
 boilerplate mega-buckets) IS honored incrementally: the cap makes an
@@ -80,58 +82,37 @@ from radares_spark.pipeline.corpus import (
 from radares_spark.io.fs import delete as fs_delete
 from radares_spark.pipeline.snapshot import content_fingerprint
 from radares_spark.pipeline.state_ledger import (
+    STATE_TABLES,
     LedgerState,
     compaction_floor,
     read_state,
     write_state_epoch,
 )
 
-# Every public entry below takes states as ``str | LedgerState``: a
-# str is the legacy full-rewrite layout (one dir per night, every
-# table rewritten in full); a LedgerState addresses one epoch of the
-# delta state ledger (pipeline/state_ledger.py), where a night writes
-# ONLY its changed rows — the delta-proportional production shape.
-
-
-def _state_read(spark: SparkSession, state, table: str) -> DataFrame:
-    if isinstance(state, LedgerState):
-        return read_state(spark, state, table)
-    return spark.read.parquet(f"{state}/{table}")
-
-
 def _state_write(
     spark: SparkSession,
-    state,
+    state: LedgerState,
     table: str,
-    full: DataFrame,
     delta: DataFrame,
     dead: DataFrame,
 ) -> DataFrame:
-    """Land one table of one night's refreshed state, returning the
-    disk-backed read-back frame (the lineage break every downstream
-    step keys off). Dir states write ``full``; a LedgerState writes
-    ONLY ``delta`` rows + ``dead`` tombstones to its epoch partition —
-    carry = no write, so the nightly state write scales with the
-    delta, never the corpus (r10 verdict #1)."""
-    if isinstance(state, LedgerState):
-        write_state_epoch(spark, state, table, delta, dead)
-        return read_state(spark, state, table)
-    return _write_read(full, f"{state}/{table}")
+    """Land one table of one night's refreshed state — ONLY ``delta``
+    rows + ``dead`` tombstones as the epoch partition (carry = no
+    write, r10 verdict #1) — and return the disk-backed as-of view
+    (the lineage break every downstream step keys off)."""
+    write_state_epoch(spark, state, table, delta, dead)
+    return read_state(spark, state, table)
 
 
-def _knobs_dir(state) -> str:
-    """Knobs live once per ledger (immutable for its lifetime) vs once
-    per night dir in the legacy layout."""
-    base = state.ledger_dir if isinstance(state, LedgerState) else state
-    return f"{base}/knobs"
+def _knobs_dir(state: LedgerState) -> str:
+    """Knobs live once per ledger (immutable for its lifetime)."""
+    return f"{state.ledger_dir}/knobs"
 
 
-def _check_floor(spark: SparkSession, state) -> None:
+def _check_floor(spark: SparkSession, state: LedgerState) -> None:
     """An as-of read below the ledger's compaction floor would
     silently serve a base view that already contains LATER nights'
     changes — fail fast instead."""
-    if not isinstance(state, LedgerState):
-        return
     floor = compaction_floor(spark, state.ledger_dir)
     if floor is not None and state.epoch < floor:
         raise ValueError(
@@ -160,67 +141,50 @@ def _alive(feats: DataFrame, keep_langs: tuple[str, ...]):
     return F.col("quality_pass") & F.col("pred_lang").isin(*keep_langs) & F.col("exact_keep")
 
 
-def _write_read(df: DataFrame, path: str) -> DataFrame:
-    df.write.mode("overwrite").parquet(path)
-    return df.sparkSession.read.parquet(path)
-
-
-def _write_knobs(
-    spark: SparkSession,
-    state_dir,
+def _knobs_row(
     keep_langs: tuple[str, ...],
     sample_pct: int,
     jaccard_threshold: float,
     max_bucket: int | None,
-) -> None:
-    """One-row knobs meta (the postings-store meta idiom): the knobs
-    are part of the state's meaning, so they travel with it. A ledger
-    records them ONCE (immutable for its lifetime — _check_knobs
-    already proved tonight's match), not once per night."""
-    from radares_spark.io import fs as iofs
-
-    if isinstance(state_dir, LedgerState) and iofs.has_parquet(
-        spark, _knobs_dir(state_dir)
-    ):
-        return
-    spark.createDataFrame(
-        [
-            (
-                ",".join(keep_langs),
-                int(sample_pct),
-                float(jaccard_threshold),
-                -1 if max_bucket is None else int(max_bucket),
-            )
-        ],
-        "keep_langs string, sample_pct int, jaccard_threshold double, max_bucket int",
-    ).repartition(1).write.mode("overwrite").parquet(_knobs_dir(state_dir))
-    # repartition(1), never coalesce(1), on local relations — the
-    # coalesce form serializes 32 Python slices in one task, ~4 s of
-    # fixed cost per write (see shards._write_meta)
-
-
-def _check_knobs(
-    spark: SparkSession,
-    state_in,
-    keep_langs: tuple[str, ...],
-    sample_pct: int,
-    jaccard_threshold: float,
-    max_bucket: int | None,
-) -> None:
-    """Fail fast when the caller's knobs differ from the knobs the
-    state was built under — carried outcomes are only valid under the
-    SAME semantics. States predating the knobs meta skip the check."""
-    from radares_spark.io import fs as iofs
-
-    if not iofs.has_parquet(spark, _knobs_dir(state_in)):
-        return
-    row = spark.read.parquet(_knobs_dir(state_in)).collect()[0]
-    want = (
+) -> tuple:
+    return (
         ",".join(keep_langs),
         int(sample_pct),
         float(jaccard_threshold),
         -1 if max_bucket is None else int(max_bucket),
     )
+
+
+def _write_knobs(spark: SparkSession, state: LedgerState, *knobs) -> None:
+    """One-row knobs meta (the postings-store meta idiom): the knobs
+    are part of the state's meaning, so the ledger records them ONCE,
+    at night zero — they are immutable for its lifetime."""
+    spark.createDataFrame(
+        [_knobs_row(*knobs)],
+        "keep_langs string, sample_pct int, jaccard_threshold double, max_bucket int",
+    ).repartition(1).write.mode("overwrite").parquet(_knobs_dir(state))
+    # repartition(1), never coalesce(1), on local relations — the
+    # coalesce form serializes 32 Python slices in one task, ~4 s of
+    # fixed cost per write (see shards._write_meta)
+
+
+def _check_knobs(spark: SparkSession, state_in: LedgerState, *knobs) -> None:
+    """Fail fast when the caller's knobs differ from the knobs the
+    state was built under — carried outcomes are only valid under the
+    SAME semantics — or when the ledger has no knobs meta at all
+    (``init_state`` always writes one, so its absence means a damaged
+    or foreign ledger whose semantics cannot be proven)."""
+    from radares_spark.io import fs as iofs
+
+    if not iofs.has_parquet(spark, _knobs_dir(state_in)):
+        raise ValueError(
+            f"state ledger {state_in.ledger_dir!r} has no knobs meta "
+            f"({_knobs_dir(state_in)!r}); carried outcomes cannot be "
+            "proven to match the caller's knobs — rebuild the state "
+            "with init_state"
+        )
+    row = spark.read.parquet(_knobs_dir(state_in)).head()
+    want = _knobs_row(*knobs)
     got = (
         row["keep_langs"],
         row["sample_pct"],
@@ -239,16 +203,16 @@ def _check_knobs(
 def init_state(
     spark: SparkSession,
     docs: DataFrame,
-    state_dir,
+    state: LedgerState,
     keep_langs: tuple[str, ...] = ("en",),
     sample_pct: int = 100,
     jaccard_threshold: float = 0.8,
     max_bucket: int | None = None,
 ) -> DataFrame:
-    """Night zero: full batch curation, landing the reusable state
-    (``state_dir``: legacy dir, or a LedgerState whose epoch becomes
-    the ledger's base — every row is that epoch's "delta").
-    Returns the audit (read back from the state)."""
+    """Night zero: full batch curation, landing the reusable state —
+    ``state.epoch`` becomes the ledger's base (every row is that
+    epoch's "delta") and the knobs meta is recorded at the ledger
+    root. Returns the audit (read back from the state)."""
     none_dead = docs.select("doc_id").limit(0)
     feats = _features(docs)
     keeper = feats.groupBy("text_hash").agg(F.min("doc_id").alias("keep_id"))
@@ -257,11 +221,11 @@ def init_state(
         .withColumn("exact_keep", F.col("doc_id") == F.col("keep_id"))
         .drop("keep_id")
     )
-    feats = _state_write(spark, state_dir, "features", feats, feats, none_dead)
+    feats = _state_write(spark, state, "features", feats, none_dead)
 
     alive_ids = feats.filter(_alive(feats, keep_langs)).select("doc_id")
     bands = lsh_bands(minhash_signatures(docs.join(alive_ids, "doc_id", "left_semi")))
-    bands = _state_write(spark, state_dir, "bands", bands, bands, none_dead)
+    bands = _state_write(spark, state, "bands", bands, none_dead)
 
     if max_bucket is not None:
         cand, _hot = lsh_pairs_capped(bands, max_bucket)
@@ -279,16 +243,28 @@ def init_state(
         "doc_id", outcome_ladder(keep_langs, sample_pct).alias("outcome")
     )
     _write_knobs(
-        spark, state_dir, keep_langs, sample_pct, jaccard_threshold, max_bucket
+        spark, state, keep_langs, sample_pct, jaccard_threshold, max_bucket
     )
-    return _state_write(spark, state_dir, "audit", audit, audit, none_dead)
+    return _state_write(spark, state, "audit", audit, none_dead)
+
+
+def _prior_state(
+    spark: SparkSession, state_in: LedgerState, state_out: LedgerState, *knobs
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The refresh entries' shared guards, then last night's
+    ``(features, bands, audit)`` views."""
+    if state_in == state_out:
+        raise ValueError("state_out must differ from state_in (write-new-then-swap)")
+    _check_floor(spark, state_in)
+    _check_knobs(spark, state_in, *knobs)
+    return tuple(read_state(spark, state_in, t) for t in STATE_TABLES)
 
 
 def refresh(
     spark: SparkSession,
     new_docs: DataFrame,
-    state_in,
-    state_out,
+    state_in: LedgerState,
+    state_out: LedgerState,
     keep_langs: tuple[str, ...] = ("en",),
     sample_pct: int = 100,
     jaccard_threshold: float = 0.8,
@@ -307,15 +283,10 @@ def refresh(
     changes are always bucket churn, so cap flips land inside the
     affected set); it must match the knob the state was built with —
     mismatches fail fast via the state's knobs meta."""
-    if state_in == state_out:
-        raise ValueError("state_out must differ from state_in (write-new-then-swap)")
-    _check_floor(spark, state_in)
-    _check_knobs(
-        spark, state_in, keep_langs, sample_pct, jaccard_threshold, max_bucket
+    prior_feats, prior_bands, prior_audit = _prior_state(
+        spark, state_in, state_out,
+        keep_langs, sample_pct, jaccard_threshold, max_bucket,
     )
-    prior_feats = _state_read(spark, state_in, "features")
-    prior_bands = _state_read(spark, state_in, "bands")
-    prior_audit = _state_read(spark, state_in, "audit")
 
     # -- 1. delta detection on the raw-byte fingerprint ---------------
     # Every small multi-consumer frame below is PINNED with an eager
@@ -408,8 +379,8 @@ def _pruned_store_text(
 def refresh_night(
     spark: SparkSession,
     tonight_docs: DataFrame,
-    state_in,
-    state_out,
+    state_in: LedgerState,
+    state_out: LedgerState,
     kept_store_dir: str,
     keep_langs: tuple[str, ...] = ("en",),
     sample_pct: int = 100,
@@ -444,15 +415,10 @@ def refresh_night(
       tonight's rewritten docs ride tonight's frame, docs the crashed
       run dropped read as removed.
     """
-    if state_in == state_out:
-        raise ValueError("state_out must differ from state_in (write-new-then-swap)")
-    _check_floor(spark, state_in)
-    _check_knobs(
-        spark, state_in, keep_langs, sample_pct, jaccard_threshold, max_bucket
+    prior_feats, prior_bands, prior_audit = _prior_state(
+        spark, state_in, state_out,
+        keep_langs, sample_pct, jaccard_threshold, max_bucket,
     )
-    prior_feats = _state_read(spark, state_in, "features")
-    prior_bands = _state_read(spark, state_in, "bands")
-    prior_audit = _state_read(spark, state_in, "audit")
 
     tonight = tonight_docs.select("doc_id", "text").localCheckpoint()
     tonight_ids = tonight.select("doc_id")
@@ -535,7 +501,7 @@ def _refresh_core(
     prior_feats: DataFrame,
     prior_bands: DataFrame,
     prior_audit: DataFrame,
-    state_out,
+    state_out: LedgerState,
     keep_langs: tuple[str, ...],
     sample_pct: int,
     jaccard_threshold: float,
@@ -578,24 +544,12 @@ def _refresh_core(
         .withColumn("exact_keep", F.col("doc_id") == F.col("keep_id"))
         .drop("keep_id")
     )
-    carried = (
-        feats_stable.join(affected_hashes, "text_hash", "left_anti")
-        .join(
-            prior_feats.select("doc_id", "exact_keep"), "doc_id"
-        )  # hash untouched => prior keeper decision stands
-    )
     # ledger delta = exactly the recomputed rows (delta-bounded by the
     # affected-hash semi-joins above; a recomputed row that happens to
     # equal its prior value shadows equal content) + tombstones for
-    # removed docs; carried rows are carried BY NOT BEING WRITTEN
-    feats_new = _state_write(
-        spark,
-        state_out,
-        "features",
-        full=carried.unionByName(recomputed),
-        delta=recomputed,
-        dead=removed_ids,
-    )
+    # removed docs; rows of untouched hashes keep their prior keeper
+    # decision and are carried BY NOT BEING WRITTEN
+    feats_new = _state_write(spark, state_out, "features", recomputed, removed_ids)
 
     # -- 4. aliveness churn (quality/lang flips ride delta_ids;
     #       exact flips can hit ANY doc in an affected hash group) ----
@@ -626,16 +580,7 @@ def _refresh_core(
         .join(prior_bands.select("doc_id"), "doc_id", "left_semi")
         .distinct()
     )
-    bands_new = _state_write(
-        spark,
-        state_out,
-        "bands",
-        full=prior_bands.join(void_ids, "doc_id", "left_anti").unionByName(
-            fresh_bands
-        ),
-        delta=fresh_bands,
-        dead=band_dead,
-    )
+    bands_new = _state_write(spark, state_out, "bands", fresh_bands, band_dead)
     churned = (
         prior_bands.join(void_ids, "doc_id", "left_semi")
         .select("band", "band_hash")
@@ -733,12 +678,8 @@ def _refresh_core(
         spark,
         state_out,
         "audit",
-        full=audit,
-        delta=audit.join(audit_changed, "doc_id", "left_semi"),
-        dead=removed_ids,
-    )
-    _write_knobs(
-        spark, state_out, keep_langs, sample_pct, jaccard_threshold, max_bucket
+        audit.join(audit_changed, "doc_id", "left_semi"),
+        removed_ids,
     )
 
     stats = {
@@ -763,16 +704,16 @@ def _refresh_core(
 N_STORE_BUCKETS = 64
 
 
-def _kept(spark: SparkSession, state_dir) -> DataFrame:
+def _kept(spark: SparkSession, state: LedgerState) -> DataFrame:
     return (
-        _state_read(spark, state_dir, "audit")
+        read_state(spark, state, "audit")
         .filter(F.col("outcome") == KEPT)
         .select("doc_id")
     )
 
 
 def kept_churn(
-    spark: SparkSession, state_in, state_out
+    spark: SparkSession, state_in: LedgerState, state_out: LedgerState
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """``(entered, left, rewritten)`` doc_id frames describing how the
     KEPT set changed across one refresh — the single churn computation
@@ -793,9 +734,7 @@ def kept_churn(
     prior view instead of four corpus-wide audits (equivalence to the
     generic path is pinned in tests/test_state_ledger.py)."""
     if (
-        isinstance(state_in, LedgerState)
-        and isinstance(state_out, LedgerState)
-        and state_in.ledger_dir == state_out.ledger_dir
+        state_in.ledger_dir == state_out.ledger_dir
         and state_out.epoch == state_in.epoch + 1
     ):
         return _kept_churn_ledger_delta(spark, state_in, state_out)
@@ -803,10 +742,10 @@ def kept_churn(
     kept_new = _kept(spark, state_out)
     entered = kept_new.join(kept_old, "doc_id", "left_anti")
     left = kept_old.join(kept_new, "doc_id", "left_anti")
-    fp_old = _state_read(spark, state_in, "features").select(
+    fp_old = read_state(spark, state_in, "features").select(
         "doc_id", F.col("raw_hash").alias("old_raw")
     )
-    fp_new = _state_read(spark, state_out, "features").select(
+    fp_new = read_state(spark, state_out, "features").select(
         "doc_id", "raw_hash"
     )
     rewritten = (
@@ -820,7 +759,7 @@ def kept_churn(
 
 
 def _kept_churn_ledger_delta(
-    spark: SparkSession, state_in: "LedgerState", state_out: "LedgerState"
+    spark: SparkSession, state_in: LedgerState, state_out: LedgerState
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """kept_churn over one ledger night from its delta partitions: a
     doc entering/leaving the kept set has a changed outcome (in the
@@ -877,7 +816,7 @@ def _store_bucket(n_buckets: int):
 def init_store(
     spark: SparkSession,
     docs: DataFrame,
-    state_dir,
+    state: LedgerState,
     store_dir: str,
     n_buckets: int = N_STORE_BUCKETS,
 ) -> None:
@@ -886,10 +825,9 @@ def init_store(
     The bucket is the REWRITE UNIT for refresh nights: at 100 TB,
     ``n_buckets`` is sized so one bucket is an acceptable rewrite
     (churning b buckets rewrites b/n of the store, never all of it)."""
-    audit = _state_read(spark, state_dir, "audit")
-    kept = docs.join(
-        audit.filter(F.col("outcome") == KEPT), "doc_id", "left_semi"
-    ).withColumn("part_bucket", _store_bucket(n_buckets))
+    kept = docs.join(_kept(spark, state), "doc_id", "left_semi").withColumn(
+        "part_bucket", _store_bucket(n_buckets)
+    )
     kept.write.mode("overwrite").partitionBy("part_bucket").parquet(store_dir)
     # _-prefixed dir => invisible to Spark reads of store_dir; pins the
     # bucket count so a later apply with a different n_buckets (which
@@ -903,8 +841,8 @@ def init_store(
 def apply_refresh_to_store(
     spark: SparkSession,
     new_docs: DataFrame,
-    state_in,
-    state_out,
+    state_in: LedgerState,
+    state_out: LedgerState,
     store_dir: str,
     n_buckets: int = N_STORE_BUCKETS,
     churn: tuple[DataFrame, DataFrame, DataFrame] | None = None,
@@ -996,22 +934,22 @@ def night_snapshot_source(
 
 
 def init_postings_from_state(
-    spark: SparkSession, docs: DataFrame, state_dir, postings_dir: str
+    spark: SparkSession, docs: DataFrame, state: LedgerState, postings_dir: str
 ) -> None:
     """Night zero of the retrieval index: BM25 postings over exactly
     the kept docs (operators/retrieval.build_postings_store)."""
     from radares_spark.operators.retrieval import build_postings_store
 
     build_postings_store(
-        docs.join(_kept(spark, state_dir), "doc_id", "left_semi"), postings_dir
+        docs.join(_kept(spark, state), "doc_id", "left_semi"), postings_dir
     )
 
 
 def apply_refresh_to_postings_store(
     spark: SparkSession,
     new_docs: DataFrame,
-    state_in,
-    state_out,
+    state_in: LedgerState,
+    state_out: LedgerState,
     kept_store_dir: str,
     postings_dir: str,
     night: str | None = None,
@@ -1069,7 +1007,7 @@ def _kept_vectors(docs: DataFrame, dim: int) -> DataFrame:
 def init_ivf_from_state(
     spark: SparkSession,
     docs: DataFrame,
-    state_dir,
+    state: LedgerState,
     ivf_dir: str,
     dim: int | None = None,
     n_cells: int = 8,
@@ -1082,7 +1020,7 @@ def init_ivf_from_state(
 
     d = EMBED_DIM if dim is None else dim
     normed = _kept_vectors(
-        docs.join(_kept(spark, state_dir), "doc_id", "left_semi"), d
+        docs.join(_kept(spark, state), "doc_id", "left_semi"), d
     ).localCheckpoint()
     assignment, centroids = build_ivf_index(normed, n_cells=n_cells, dim=d)
     write_ivf_store(spark, normed, assignment, centroids, ivf_dir)
@@ -1091,8 +1029,8 @@ def init_ivf_from_state(
 def apply_refresh_to_ivf_store(
     spark: SparkSession,
     new_docs: DataFrame,
-    state_in,
-    state_out,
+    state_in: LedgerState,
+    state_out: LedgerState,
     ivf_dir: str,
     dim: int | None = None,
     churn: tuple[DataFrame, DataFrame, DataFrame] | None = None,

@@ -1,13 +1,12 @@
 """Delta-proportional refresh-state ledger (r10 verdict #1 — the last
 O(corpus)-per-night term in the production night).
 
-Every refresh night used to rewrite the FULL features/bands/audit
-ledgers into a brand-new ``state/<night>`` dir and retain every
-night's copy forever. The rows are narrow (two hashes + flags per
-doc, no text), but at 10^9-10^10 docs that is a ~100 GB-1 TB write
-per night and unbounded O(corpus)-per-night storage growth: a year of
-nights retains ~365 full copies of the corpus-wide ledger. This
-module applies the repo's OWN epoch-ledger discipline (the streaming
+Rewriting the FULL features/bands/audit tables every night and
+keeping each night's copy would cost, at 10^9-10^10 docs, a
+~100 GB-1 TB write per night (the rows are narrow — two hashes +
+flags per doc, no text) and unbounded storage: a year of nights
+would retain ~365 full copies of the corpus-wide state. This module
+applies the repo's OWN epoch-ledger discipline (the streaming
 admission ledger's epoch partitions, the shard store's epoch=-1
 compaction) to the refresh state:
 
@@ -36,8 +35,8 @@ compaction) to the refresh state:
 Crash replay: a crashed (un-logged) night re-runs deterministically
 and :func:`write_state_epoch` clears any partial ``epoch=N``
 partition before rewriting it, so a replay lands byte-identically and
-prior epochs are never touched — the same contract the materialized
-``state/<night>`` dirs had under write-new-then-swap.
+prior epochs are never touched (write-new-then-swap at epoch
+granularity).
 
 As-of reads BELOW the compaction floor are gone by design;
 ``compaction_floor`` records the fold point (written BEFORE the fold,
@@ -66,11 +65,10 @@ COMPACTED_EPOCH = -1
 
 @dataclass(frozen=True)
 class LedgerState:
-    """One epoch's view of a delta state ledger — accepted anywhere
-    the refresh layer takes a state DIR path (``str`` keeps the
-    legacy full-rewrite layout). ``epoch`` is the night index the
-    orchestrator assigns (night log order), so consecutive nights are
-    consecutive epochs."""
+    """One epoch's view of a delta state ledger — the only state
+    address the refresh layer (pipeline/refresh.py) takes. ``epoch``
+    is the night index the orchestrator assigns (night log order), so
+    consecutive nights are consecutive epochs."""
 
     ledger_dir: str
     epoch: int
@@ -82,8 +80,8 @@ class LedgerState:
 def read_state(spark: SparkSession, state: LedgerState, table: str) -> DataFrame:
     """The state table as of ``state.epoch``: latest-per-doc over
     ``epoch <= e`` (partition-pruned), tombstoned docs dropped, payload
-    columns only — row-equal to what the legacy full-rewrite layout
-    stored in ``state/<night>/<table>``.
+    columns only — row-equal to the full table a from-scratch
+    ``init_state`` of the same snapshot would land.
 
     Latest-per-doc is a max-over-window + filter (ONE doc_id shuffle;
     every row of a doc's newest epoch survives, which the bands table

@@ -304,32 +304,58 @@ def test_snapshot_diff_subcommand(spark, tmp_path, capsys):
     assert landed == {1: "removed", 2: "unchanged", 3: "changed", 4: "added"}
 
 
+def _ledger(tmp_path, epoch):
+    from radares_spark.pipeline.state_ledger import LedgerState
+
+    return LedgerState(str(tmp_path / "state_ledger"), epoch)
+
+
 def test_corpus_refresh_subcommand_two_nights(spark, tmp_path, capsys):
-    """corpus-refresh: night zero (no --state-in) batch-curates and
-    lands state; night one refreshes against it, reporting the
-    delta-proportional stats alongside outcome counts."""
+    """corpus-refresh through the CLI face: ``--epoch 0`` batch-curates
+    night zero into the ``--state-ledger``; ``--epoch 1`` refreshes
+    epoch 0 -> 1, reporting the delta-proportional stats alongside
+    outcome counts and appending only its delta epoch."""
+    import os
+
     import pandas as pd
 
-    from radares_spark.cli import cmd_corpus_refresh
+    from radares_spark.cli import main
     from tests.test_refresh import mk_text
 
+    def run(docs, epoch):
+        argv = ["corpus-refresh", "--docs", docs, "--state-ledger", led,
+                "--epoch", str(epoch)]
+        assert main(argv) == 0
+        out = capsys.readouterr().out
+        return dict(
+            (k, int(v)) for k, v in (ln.split(": ") for ln in out.splitlines())
+        )
+
+    led = str(tmp_path / "state_ledger")
     rows = [(i, mk_text(i)) for i in range(10)] + [(10, mk_text(0))]
     n0 = str(tmp_path / "docs_n0")
     spark.createDataFrame(
         pd.DataFrame(rows, columns=["doc_id", "text"])
     ).write.parquet(n0)
-    c0 = cmd_corpus_refresh(spark, n0, str(tmp_path / "s0"))
+    c0 = run(n0, 0)
     assert c0["kept"] == 10 and c0["exact_dup"] == 1
+    assert os.path.isdir(f"{led}/knobs")
 
     n1 = str(tmp_path / "docs_n1")
     spark.createDataFrame(
         pd.DataFrame(rows[1:], columns=["doc_id", "text"])  # drop keeper 0
     ).write.parquet(n1)
-    c1 = cmd_corpus_refresh(
-        spark, n1, str(tmp_path / "s1"), state_in=str(tmp_path / "s0")
-    )
+    c1 = run(n1, 1)
     assert c1["kept"] == 10 and "exact_dup" not in c1  # 10 resurrected
     assert c1["n_removed"] == 1 and c1["n_delta"] == 0
+    # epoch 1 holds the delta only: 0's tombstone + 10's flipped keep
+    e1 = spark.read.parquet(f"{led}/features").filter(F.col("epoch") == 1)
+    assert sorted(r["doc_id"] for r in e1.collect()) == [0, 10]
+
+    # a negative epoch is a usage error, caught before any Spark work
+    with pytest.raises(SystemExit):
+        main(["corpus-refresh", "--docs", n1, "--state-ledger", led,
+              "--epoch", "-1"])
 
 
 def test_corpus_refresh_store_flag(spark, tmp_path):
@@ -347,7 +373,7 @@ def test_corpus_refresh_store_flag(spark, tmp_path):
         pd.DataFrame(rows, columns=["doc_id", "text"])
     ).write.parquet(n0)
     store = str(tmp_path / "store")
-    c0 = cmd_corpus_refresh(spark, n0, str(tmp_path / "s0"), store_dir=store)
+    c0 = cmd_corpus_refresh(spark, n0, _ledger(tmp_path, 0), store_dir=store)
     assert c0["kept"] == 8
     assert spark.read.parquet(store).count() == 8
 
@@ -356,8 +382,8 @@ def test_corpus_refresh_store_flag(spark, tmp_path):
         pd.DataFrame(rows[2:], columns=["doc_id", "text"])
     ).write.parquet(n1)
     c1 = cmd_corpus_refresh(
-        spark, n1, str(tmp_path / "s1"),
-        state_in=str(tmp_path / "s0"), store_dir=store,
+        spark, n1, _ledger(tmp_path, 1),
+        state_in=_ledger(tmp_path, 0), store_dir=store,
     )
     assert c1["kept"] == 6 and c1["n_churned_docs"] == 2
     assert sorted(
@@ -403,11 +429,11 @@ def test_corpus_refresh_all_stores_three_nights(spark, tmp_path):
             .collect()
         }
 
-    def assert_postings_equals_rebuild(docs_path, state_dir):
+    def assert_postings_equals_rebuild(docs_path, state):
         kept = (
             spark.read.parquet(docs_path)
             .select("doc_id", "text")
-            .join(_kept(spark, state_dir), "doc_id", "left_semi")
+            .join(_kept(spark, state), "doc_id", "left_semi")
         )
         rb = str(tmp_path / "postings_rebuild")
         build_postings_store(kept, rb)
@@ -422,13 +448,13 @@ def test_corpus_refresh_all_stores_three_nights(spark, tmp_path):
             for r in spark.read.parquet(path).collect()
         }
 
-    def assert_ivf_equals_rebuild(docs_path, state_dir):
+    def assert_ivf_equals_rebuild(docs_path, state):
         """Rebuild-with-same-centroids: the store's frozen quantizer
         over tonight's full kept vector set."""
         kept = (
             spark.read.parquet(docs_path)
             .select("doc_id", "text")
-            .join(_kept(spark, state_dir), "doc_id", "left_semi")
+            .join(_kept(spark, state), "doc_id", "left_semi")
         )
         vecs = _kept_vectors(kept, 16)
         cents = spark.read.parquet(f"{ivf}/_centroids")
@@ -445,12 +471,12 @@ def test_corpus_refresh_all_stores_three_nights(spark, tmp_path):
     rows0 = [(i, mk_text(i)) for i in range(10)] + [(20, mk_text(0))]
     d0 = write_docs("d0", rows0)
     c0 = cmd_corpus_refresh(
-        spark, d0, str(tmp_path / "s0"),
+        spark, d0, _ledger(tmp_path, 0),
         store_dir=kst, postings_dir=pst, ivf_dir=ivf,
     )
     assert c0["kept"] == 10
-    assert_postings_equals_rebuild(d0, str(tmp_path / "s0"))
-    assert_ivf_equals_rebuild(d0, str(tmp_path / "s0"))
+    assert_postings_equals_rebuild(d0, _ledger(tmp_path, 0))
+    assert_ivf_equals_rebuild(d0, _ledger(tmp_path, 0))
 
     # night 1: churn — doc 3 rewritten, doc 5 removed, doc 30 added
     rows1 = [
@@ -460,11 +486,11 @@ def test_corpus_refresh_all_stores_three_nights(spark, tmp_path):
     ] + [(30, mk_text(30))]
     d1 = write_docs("d1", rows1)
     c1 = cmd_corpus_refresh(
-        spark, d1, str(tmp_path / "s1"), state_in=str(tmp_path / "s0"),
+        spark, d1, _ledger(tmp_path, 1), state_in=_ledger(tmp_path, 0),
         store_dir=kst, postings_dir=pst, ivf_dir=ivf,
     )
-    assert_postings_equals_rebuild(d1, str(tmp_path / "s1"))
-    assert_ivf_equals_rebuild(d1, str(tmp_path / "s1"))
+    assert_postings_equals_rebuild(d1, _ledger(tmp_path, 1))
+    assert_ivf_equals_rebuild(d1, _ledger(tmp_path, 1))
     # delta-proportional: each store reports bounded rewrites
     assert 0 < c1["postings_n_buckets_rewritten"]
     assert 0 < c1["ivf_n_cells_rewritten"]
@@ -478,7 +504,7 @@ def test_corpus_refresh_all_stores_three_nights(spark, tmp_path):
         "ivf": files(ivf, "cell=*/*.parquet"),
     }
     c2 = cmd_corpus_refresh(
-        spark, d2, str(tmp_path / "s2"), state_in=str(tmp_path / "s1"),
+        spark, d2, _ledger(tmp_path, 2), state_in=_ledger(tmp_path, 1),
         store_dir=kst, postings_dir=pst, ivf_dir=ivf,
     )
     after = {
@@ -505,7 +531,7 @@ def test_corpus_refresh_postings_requires_store(spark, tmp_path):
     ).write.parquet(p)
     with _pytest.raises(ValueError, match="requires --store"):
         cmd_corpus_refresh(
-            spark, p, str(tmp_path / "s0"), postings_dir=str(tmp_path / "pst")
+            spark, p, _ledger(tmp_path, 0), postings_dir=str(tmp_path / "pst")
         )
 
 

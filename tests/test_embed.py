@@ -233,3 +233,23 @@ def test_zero_norm_vectors_are_dropped_not_emitted(spark):
     assert ids == {1, 2}  # doc 0's only token has IDF 0 -> dropped
     for r in out.collect():
         assert abs(np.linalg.norm(np.array(r["embedding"])) - 1.0) < 1e-9
+
+
+@pytest.mark.parametrize(
+    "ddl, ids",
+    [("int", [10, 11, 12, 13, 14]), ("string", ["a", "b", "c", "d", "e"])],
+)
+def test_doc_id_type_passes_through(spark, frame, ddl, ids):
+    """The kernel passes doc_id through in its input type: an int or
+    string key comes back with the same type and yields the vectors
+    the bigint key does, row for row."""
+    want = _vecs(hashed_tf(frame))
+    remap = dict(zip(range(5), ids))
+    rows = [(remap[r["doc_id"]], r["text"]) for r in frame.collect()]
+    docs = spark.createDataFrame(rows, f"doc_id {ddl}, text string")
+    out = hashed_tf(docs)
+    assert out.schema["doc_id"].dataType.simpleString() == ddl
+    got = _vecs(out)
+    assert set(got) == {remap[i] for i in want}
+    for i, v in want.items():
+        assert np.array_equal(got[remap[i]], v)

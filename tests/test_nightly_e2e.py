@@ -91,8 +91,9 @@ def test_three_night_production_pipeline(spark, tmp_path, capsys):
     assert a1 == {1: "kept", 2: "kept"}
     snap1 = str(tmp_path / "snap1")
     spark.read.parquet(str(out1 / "kept")).select("doc_id", "text").write.parquet(snap1)
-    assert main(["corpus-refresh", "--docs", snap1,
-                 "--state-out", str(tmp_path / "s1"), "--ivf-store", ivf]) == 0
+    state = str(tmp_path / "state_ledger")
+    assert main(["corpus-refresh", "--docs", snap1, "--state-ledger", state,
+                 "--epoch", "0", "--ivf-store", ivf]) == 0
     capsys.readouterr()
     assert main(["tokenizer-train", "--docs", snap1, "--out", tok,
                  "--n-merges", "12", "--shards", shards, "--ctx-len", "16"]) == 0
@@ -112,9 +113,8 @@ def test_three_night_production_pipeline(spark, tmp_path, capsys):
         .select("doc_id", "text")
         .write.parquet(snap2)
     )
-    assert main(["corpus-refresh", "--docs", snap2,
-                 "--state-in", str(tmp_path / "s1"),
-                 "--state-out", str(tmp_path / "s2"), "--ivf-store", ivf]) == 0
+    assert main(["corpus-refresh", "--docs", snap2, "--state-ledger", state,
+                 "--epoch", "1", "--ivf-store", ivf]) == 0
     printed = capsys.readouterr().out
     assert "ivf_" in printed  # the serving store was refresh-maintained
     assert main(["shards-append", "--docs", str(out2 / "kept"),

@@ -114,6 +114,15 @@ def test_nightly_verify_flags(spark, tmp_path, capsys):
     shutil.rmtree(meta_dir)
     shutil.copytree(saved_meta, meta_dir)
 
+    # --- missing state ledger under a non-empty night log: the state
+    # is gone, so states_present must fail (never pass by default)
+    led = f"{root}/state_ledger"
+    shutil.move(led, str(tmp_path / "saved_ledger"))
+    checks = cmd_nightly_verify(spark, root)
+    assert checks["states_present"] is False and not checks["ok"]
+    shutil.move(str(tmp_path / "saved_ledger"), led)
+    assert cmd_nightly_verify(spark, root)["ok"]
+
     # --- foreign kept store: a resident the state never audited -------
     spark.createDataFrame([(888888, "foreign doc text")], "doc_id long, text string").withColumn(
         "part_bucket", F.lit(int(888888 % 64))

@@ -20,6 +20,7 @@ pytestmark = pytest.mark.slow
 
 from radares_spark.pipeline.corpus import curate
 from radares_spark.pipeline.refresh import init_state, refresh
+from radares_spark.pipeline.state_ledger import LedgerState
 
 STOP = "the and is in of to it was for on"  # high-frequency english
 
@@ -41,6 +42,11 @@ def near_variant(i: int, words: int = 40) -> str:
     toks = mk_text(i, words).split()
     toks[words // 2] = "tweaked"
     return " ".join(toks)
+
+
+def _st(tmp_path, epoch: int) -> LedgerState:
+    """Epoch ``epoch`` of the test's delta state ledger."""
+    return LedgerState(str(tmp_path / "state_ledger"), epoch)
 
 
 def _df(spark, rows):
@@ -70,7 +76,7 @@ BASE = [
 
 def test_init_matches_batch_curate(spark, tmp_path):
     docs = _df(spark, BASE)
-    audit = init_state(spark, docs, str(tmp_path / "s0"))
+    audit = init_state(spark, docs, _st(tmp_path, 0))
     _assert_matches_batch(spark, docs, audit)
     got = _audit_map(audit)
     assert got[3] == "exact_dup" and got[4] == "near_dup"
@@ -79,9 +85,9 @@ def test_init_matches_batch_curate(spark, tmp_path):
 
 def test_noop_night_zero_recompute(spark, tmp_path):
     docs = _df(spark, BASE)
-    init_state(spark, docs, str(tmp_path / "s0"))
+    init_state(spark, docs, _st(tmp_path, 0))
     audit, stats = refresh(
-        spark, docs, str(tmp_path / "s0"), str(tmp_path / "s1")
+        spark, docs, _st(tmp_path, 0), _st(tmp_path, 1)
     )
     _assert_matches_batch(spark, docs, audit)
     assert stats == {
@@ -100,11 +106,11 @@ def test_keeper_removal_resurrects_exact_dup(spark, tmp_path):
     """Doc 1 (keeper of the {1,3} hash group) disappears; doc 3 must
     flip exact_dup -> kept via the affected-hash recompute."""
     docs = _df(spark, BASE)
-    init_state(spark, docs, str(tmp_path / "s0"))
+    init_state(spark, docs, _st(tmp_path, 0))
     night2 = [r for r in BASE if r[0] != 1]
     new_docs = _df(spark, night2)
     audit, stats = refresh(
-        spark, new_docs, str(tmp_path / "s0"), str(tmp_path / "s1")
+        spark, new_docs, _st(tmp_path, 0), _st(tmp_path, 1)
     )
     _assert_matches_batch(spark, new_docs, audit)
     assert _audit_map(audit)[3] == "kept"
@@ -117,10 +123,10 @@ def test_new_lower_id_demotes_old_keeper(spark, tmp_path):
     """A new doc 0 with doc 5's content becomes the group keeper;
     doc 5 must flip kept -> exact_dup."""
     docs = _df(spark, BASE)
-    init_state(spark, docs, str(tmp_path / "s0"))
+    init_state(spark, docs, _st(tmp_path, 0))
     new_docs = _df(spark, [(0, mk_text(5))] + BASE)
     audit, _ = refresh(
-        spark, new_docs, str(tmp_path / "s0"), str(tmp_path / "s1")
+        spark, new_docs, _st(tmp_path, 0), _st(tmp_path, 1)
     )
     _assert_matches_batch(spark, new_docs, audit)
     got = _audit_map(audit)
@@ -131,11 +137,11 @@ def test_partner_removal_resurrects_near_dup(spark, tmp_path):
     """Doc 2 vanishes; its near-dup 4 (dropped as the higher id of the
     verified pair) must resurrect via the churned-bucket recompute."""
     docs = _df(spark, BASE)
-    init_state(spark, docs, str(tmp_path / "s0"))
+    init_state(spark, docs, _st(tmp_path, 0))
     night2 = [r for r in BASE if r[0] != 2]
     new_docs = _df(spark, night2)
     audit, stats = refresh(
-        spark, new_docs, str(tmp_path / "s0"), str(tmp_path / "s1")
+        spark, new_docs, _st(tmp_path, 0), _st(tmp_path, 1)
     )
     _assert_matches_batch(spark, new_docs, audit)
     assert _audit_map(audit)[4] == "kept"
@@ -146,11 +152,11 @@ def test_changed_doc_forms_new_near_pair(spark, tmp_path):
     """Doc 8 is rewritten into a near-variant of doc 5: the fresh
     bands must collide, verify, and drop 8 (higher id)."""
     docs = _df(spark, BASE)
-    init_state(spark, docs, str(tmp_path / "s0"))
+    init_state(spark, docs, _st(tmp_path, 0))
     night2 = [(i, t) if i != 8 else (8, near_variant(5)) for i, t in BASE]
     new_docs = _df(spark, night2)
     audit, stats = refresh(
-        spark, new_docs, str(tmp_path / "s0"), str(tmp_path / "s1")
+        spark, new_docs, _st(tmp_path, 0), _st(tmp_path, 1)
     )
     _assert_matches_batch(spark, new_docs, audit)
     assert _audit_map(audit)[8] == "near_dup"
@@ -162,12 +168,12 @@ def test_delta_proportional_stats(spark, tmp_path):
     delta-sized, not corpus-sized."""
     big = [(i, mk_text(i)) for i in range(100, 160)]
     docs = _df(spark, big)
-    init_state(spark, docs, str(tmp_path / "s0"))
+    init_state(spark, docs, _st(tmp_path, 0))
     night2 = [(i, t) if i != 100 else (100, mk_text(999)) for i, t in big]
     night2.append((200, mk_text(200)))
     new_docs = _df(spark, night2)
     audit, stats = refresh(
-        spark, new_docs, str(tmp_path / "s0"), str(tmp_path / "s1")
+        spark, new_docs, _st(tmp_path, 0), _st(tmp_path, 1)
     )
     _assert_matches_batch(spark, new_docs, audit)
     assert stats["n_delta"] == 2  # changed 100 + added 200
@@ -180,7 +186,7 @@ def test_delta_proportional_stats(spark, tmp_path):
 def test_three_nights_randomized_equivalence(spark, tmp_path):
     """Seeded random add/remove/rewrite churn over three nights —
     every night's incremental audit equals batch curate from scratch,
-    with state rotated through night-numbered dirs. Mutations are
+    with one ledger epoch per night. Mutations are
     biased toward the interacting cases (dup-group and near-pair
     members)."""
     rng = random.Random(7)
@@ -193,7 +199,7 @@ def test_three_nights_randomized_equivalence(spark, tmp_path):
     def as_df():
         return _df(spark, sorted(corpus.items()))
 
-    init_state(spark, as_df(), str(tmp_path / "n0"))
+    init_state(spark, as_df(), _st(tmp_path, 0))
     for night in range(1, 4):
         for _ in range(4):
             op = rng.choice(["add", "remove", "rewrite", "dup", "near"])
@@ -213,17 +219,17 @@ def test_three_nights_randomized_equivalence(spark, tmp_path):
         audit, _ = refresh(
             spark,
             new_docs,
-            str(tmp_path / f"n{night - 1}"),
-            str(tmp_path / f"n{night}"),
+            _st(tmp_path, night - 1),
+            _st(tmp_path, night),
         )
         _assert_matches_batch(spark, new_docs, audit)
 
 
 def test_refresh_rejects_in_place_state(spark, tmp_path):
     docs = _df(spark, BASE)
-    init_state(spark, docs, str(tmp_path / "s0"))
+    init_state(spark, docs, _st(tmp_path, 0))
     with pytest.raises(ValueError, match="state_out"):
-        refresh(spark, docs, str(tmp_path / "s0"), str(tmp_path / "s0"))
+        refresh(spark, docs, _st(tmp_path, 0), _st(tmp_path, 0))
 
 
 # --- incremental kept-store materialization --------------------------
@@ -253,7 +259,7 @@ def test_store_init_and_incremental_apply(spark, tmp_path):
     )
 
     docs = _df(spark, BASE)
-    s0, s1 = str(tmp_path / "s0"), str(tmp_path / "s1")
+    s0, s1 = _st(tmp_path, 0), _st(tmp_path, 1)
     store = str(tmp_path / "store")
     init_state(spark, docs, s0)
     init_store(spark, docs, s0, store, n_buckets=4)
@@ -291,7 +297,7 @@ def test_store_noop_night_rewrites_nothing(spark, tmp_path):
     )
 
     docs = _df(spark, BASE)
-    s0, s1 = str(tmp_path / "s0"), str(tmp_path / "s1")
+    s0, s1 = _st(tmp_path, 0), _st(tmp_path, 1)
     store = str(tmp_path / "store")
     init_state(spark, docs, s0)
     init_store(spark, docs, s0, store, n_buckets=4)
@@ -312,12 +318,12 @@ def test_knobs_equivalence_sample_pct_and_langs(spark, tmp_path):
     rows = BASE + [(20, foreign), (21, foreign + " extra")]
     docs = _df(spark, rows)
     init_state(
-        spark, docs, str(tmp_path / "s0"), sample_pct=50
+        spark, docs, _st(tmp_path, 0), sample_pct=50
     )
     night2 = [r for r in rows if r[0] != 1] + [(22, mk_text(22))]
     new_docs = _df(spark, night2)
     audit, _ = refresh(
-        spark, new_docs, str(tmp_path / "s0"), str(tmp_path / "s1"),
+        spark, new_docs, _st(tmp_path, 0), _st(tmp_path, 1),
         sample_pct=50,
     )
     _, batch_audit, _ = curate(new_docs, sample_pct=50)
@@ -340,7 +346,7 @@ def test_sf01_recrawl_night_equivalence(spark, tmp_path):
     docs = load_table(spark, "/root/testdata/sf0.1", "documents").select(
         "doc_id", "text"
     )
-    s0, s1 = str(tmp_path / "s0"), str(tmp_path / "s1")
+    s0, s1 = _st(tmp_path, 0), _st(tmp_path, 1)
     init_state(spark, docs, s0)
     changed = docs.withColumn(
         "text",
@@ -376,7 +382,7 @@ def test_store_rejects_mismatched_bucket_count(spark, tmp_path):
     )
 
     docs = _df(spark, BASE)
-    s0, s1 = str(tmp_path / "s0"), str(tmp_path / "s1")
+    s0, s1 = _st(tmp_path, 0), _st(tmp_path, 1)
     store = str(tmp_path / "store")
     init_state(spark, docs, s0)
     init_store(spark, docs, s0, store, n_buckets=4)
@@ -398,7 +404,7 @@ def test_store_rejects_schema_narrowed_new_docs(spark, tmp_path):
 
     rows = [(i, mk_text(i), "web") for i in range(6)]
     docs = spark.createDataFrame(rows, ["doc_id", "text", "source"])
-    s0, s1 = str(tmp_path / "s0"), str(tmp_path / "s1")
+    s0, s1 = _st(tmp_path, 0), _st(tmp_path, 1)
     store = str(tmp_path / "store")
     init_state(spark, docs.select("doc_id", "text"), s0)
     init_store(spark, docs, s0, store, n_buckets=4)
@@ -449,7 +455,7 @@ def test_capped_refresh_hot_bucket_churns_across_cap(spark, tmp_path):
     b0 = _audit_map(batch0)
     assert all(b0[i] == "kept" for i in hot), b0
 
-    audit0 = init_state(spark, docs0, str(tmp_path / "n0"), max_bucket=CAP)
+    audit0 = init_state(spark, docs0, _st(tmp_path, 0), max_bucket=CAP)
     assert _audit_map(audit0) == b0
 
     # night 1: two members leave -> population 3 <= CAP -> bucket goes
@@ -457,7 +463,7 @@ def test_capped_refresh_hot_bucket_churns_across_cap(spark, tmp_path):
     corpus1 = {**base, **{i: hot[i] for i in (720, 721, 722)}}
     docs1 = _df(spark, sorted(corpus1.items()))
     audit1, stats1 = refresh(
-        spark, docs1, str(tmp_path / "n0"), str(tmp_path / "n1"), max_bucket=CAP
+        spark, docs1, _st(tmp_path, 0), _st(tmp_path, 1), max_bucket=CAP
     )
     _assert_matches_batch_capped(spark, docs1, audit1, CAP)
     a1 = _audit_map(audit1)
@@ -467,7 +473,7 @@ def test_capped_refresh_hot_bucket_churns_across_cap(spark, tmp_path):
     # pairs excluded -> the night-1 drops resurrect
     docs2 = _df(spark, sorted({**base, **hot}.items()))
     audit2, stats2 = refresh(
-        spark, docs2, str(tmp_path / "n1"), str(tmp_path / "n2"), max_bucket=CAP
+        spark, docs2, _st(tmp_path, 1), _st(tmp_path, 2), max_bucket=CAP
     )
     _assert_matches_batch_capped(spark, docs2, audit2, CAP)
     a2 = _audit_map(audit2)
@@ -506,7 +512,7 @@ def test_capped_refresh_randomized_churn(spark, tmp_path):
     def as_df():
         return _df(spark, sorted(corpus.items()))
 
-    init_state(spark, as_df(), str(tmp_path / "c0"), max_bucket=CAP)
+    init_state(spark, as_df(), _st(tmp_path, 0), max_bucket=CAP)
     for night in range(1, 4):
         for _ in range(3):
             op = rng.choice(["add", "remove", "hot_add", "hot_remove", "rewrite"])
@@ -530,8 +536,8 @@ def test_capped_refresh_randomized_churn(spark, tmp_path):
         audit, _ = refresh(
             spark,
             new_docs,
-            str(tmp_path / f"c{night - 1}"),
-            str(tmp_path / f"c{night}"),
+            _st(tmp_path, night - 1),
+            _st(tmp_path, night),
             max_bucket=CAP,
         )
         _assert_matches_batch_capped(spark, new_docs, audit, CAP)
@@ -539,16 +545,29 @@ def test_capped_refresh_randomized_churn(spark, tmp_path):
 
 def test_refresh_knob_mismatch_fails_fast(spark, tmp_path):
     docs = _df(spark, BASE)
-    init_state(spark, docs, str(tmp_path / "k0"), max_bucket=4)
+    init_state(spark, docs, _st(tmp_path, 0), max_bucket=4)
     with pytest.raises(ValueError, match="knobs"):
-        refresh(spark, docs, str(tmp_path / "k0"), str(tmp_path / "k1"))
+        refresh(spark, docs, _st(tmp_path, 0), _st(tmp_path, 1))
     with pytest.raises(ValueError, match="knobs"):
         refresh(
-            spark, docs, str(tmp_path / "k0"), str(tmp_path / "k1"),
+            spark, docs, _st(tmp_path, 0), _st(tmp_path, 1),
             max_bucket=4, jaccard_threshold=0.9,
         )
     # matching knobs proceed
     audit, _ = refresh(
-        spark, docs, str(tmp_path / "k0"), str(tmp_path / "k1"), max_bucket=4
+        spark, docs, _st(tmp_path, 0), _st(tmp_path, 1), max_bucket=4
     )
     _assert_matches_batch_capped(spark, docs, audit, 4)
+
+
+def test_refresh_rejects_ledger_without_knobs(spark, tmp_path):
+    """Every ledger records its knobs at night zero, so a missing
+    knobs meta means the carried outcomes' semantics are unknown —
+    refresh must fail fast, never skip the check."""
+    import shutil
+
+    docs = _df(spark, BASE)
+    init_state(spark, docs, _st(tmp_path, 0))
+    shutil.rmtree(f"{_st(tmp_path, 0).ledger_dir}/knobs")
+    with pytest.raises(ValueError, match="no knobs meta"):
+        refresh(spark, docs, _st(tmp_path, 0), _st(tmp_path, 1))

@@ -25,7 +25,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from radares_spark.pipeline.refresh import (
-    _state_read,
     apply_refresh_to_ivf_store,
     apply_refresh_to_postings_store,
     apply_refresh_to_store,
@@ -38,7 +37,7 @@ from radares_spark.pipeline.refresh import (
     refresh,
     refresh_night,
 )
-from radares_spark.pipeline.state_ledger import LedgerState
+from radares_spark.pipeline.state_ledger import LedgerState, read_state
 from tests.test_refresh import _df, mk_text, near_variant
 
 # Whole-module slow tier: every test here is a multi-second e2e /
@@ -54,21 +53,20 @@ def _rows(df, cols):
 def _state_rows(spark, state):
     return {
         "features": _rows(
-            _state_read(spark, state, "features"),
+            read_state(spark, state, "features"),
             ["doc_id", "text_hash", "raw_hash", "quality_pass", "pred_lang", "exact_keep"],
         ),
         "bands": _rows(
-            _state_read(spark, state, "bands"), ["doc_id", "band", "band_hash"]
+            read_state(spark, state, "bands"), ["doc_id", "band", "band_hash"]
         ),
-        "audit": _rows(_state_read(spark, state, "audit"), ["doc_id", "outcome"]),
+        "audit": _rows(read_state(spark, state, "audit"), ["doc_id", "outcome"]),
     }
 
 
-def _bootstrap(spark, root, docs, ledger=False):
+def _bootstrap(spark, root, docs):
     """Night zero: state + all three serving stores (the nightly
-    bootstrap composition) — against per-night dirs or the delta
-    state ledger."""
-    s0 = LedgerState(f"{root}/state_ledger", 0) if ledger else f"{root}/state/n0"
+    bootstrap composition)."""
+    s0 = LedgerState(f"{root}/state_ledger", 0)
     store = f"{root}/kept_store"
     postings = f"{root}/postings_store"
     ivf = f"{root}/ivf_store"
@@ -123,17 +121,11 @@ def test_refresh_night_matches_generic_snapshot_path(spark, tmp_path):
     tonight = _tonight_rows()
 
     results = {}
-    for mode in ("generic", "delta", "ledger"):
+    for mode in ("generic", "delta"):
         root = str(tmp_path / mode)
         docs0 = _df(spark, base)
-        s0, store, postings, ivf = _bootstrap(
-            spark, root, docs0, ledger=mode == "ledger"
-        )
-        s1 = (
-            LedgerState(f"{root}/state_ledger", 1)
-            if mode == "ledger"
-            else f"{root}/state/n1"
-        )
+        s0, store, postings, ivf = _bootstrap(spark, root, docs0)
+        s1 = LedgerState(f"{root}/state_ledger", 1)
         tonight_df = _df(spark, tonight)
 
         if mode == "generic":
@@ -185,15 +177,9 @@ def test_refresh_night_matches_generic_snapshot_path(spark, tmp_path):
             },
         }
 
-    g = results["generic"]
-    for mode in ("delta", "ledger"):
-        d = results[mode]
-        assert d["state"] == g["state"], mode
-        assert d["audit"] == g["audit"], mode
-        assert d["store"] == g["store"], mode
-        assert d["postings"] == g["postings"], mode
-        assert d["ivf"] == g["ivf"], mode
-        assert d["stats"] == g["stats"], mode
+    g, d = results["generic"], results["delta"]
+    for key in ("state", "audit", "store", "postings", "ivf", "stats"):
+        assert d[key] == g[key], key
 
 
 def test_refresh_night_io_counters_are_corpus_independent(spark, tmp_path):
@@ -207,7 +193,7 @@ def test_refresh_night_io_counters_are_corpus_independent(spark, tmp_path):
         root = str(tmp_path / tag)
         docs0 = _df(spark, _base_corpus(n=24 * scale))
         s0, store, postings, ivf = _bootstrap(spark, root, docs0)
-        s1 = f"{root}/state/n1"
+        s1 = LedgerState(f"{root}/state_ledger", 1)
         tonight_df = _df(spark, _tonight_rows())
         _, stats = refresh_night(spark, tonight_df, s0, s1, store)
         churn = tuple(f.localCheckpoint() for f in kept_churn(spark, s0, s1))
@@ -235,7 +221,8 @@ def test_refresh_night_rejects_store_state_divergence(spark, tmp_path):
     ).write.mode("append").partitionBy("part_bucket").parquet(store)
     with pytest.raises(ValueError, match="out of step"):
         refresh_night(
-            spark, _df(spark, _tonight_rows()), s0, f"{root}/state/n1", store
+            spark, _df(spark, _tonight_rows()), s0,
+            LedgerState(f"{root}/state_ledger", 1), store,
         )
 
 
@@ -244,9 +231,8 @@ def test_refresh_night_text_bytes_are_corpus_independent(spark, tmp_path):
     with bucket size held constant (n_buckets sized with the corpus —
     init_store's 100 TB contract), 4x the residents with the SAME
     tonight delta writes the same text bytes: the night's text I/O is
-    the delta neighborhood, never the corpus. The narrow per-night
-    state ledger (hashes + flags, no text) is the one documented
-    O(corpus) write and is excluded here."""
+    the delta neighborhood, never the corpus. The state ledger's bytes
+    are pinned separately (test_state_ledger_bytes_are_delta_proportional)."""
     import glob
     import os
 
@@ -255,10 +241,9 @@ def test_refresh_night_text_bytes_are_corpus_independent(spark, tmp_path):
         root = str(tmp_path / tag)
         store = f"{root}/kept_store"
         docs0 = _df(spark, _base_corpus(n=24 * scale))
-        s0 = f"{root}/state/n0"
+        s0, s1 = (LedgerState(f"{root}/state_ledger", e) for e in (0, 1))
         init_state(spark, docs0, s0)
         init_store(spark, docs0, s0, store, n_buckets=nb)
-        s1 = f"{root}/state/n1"
         tonight_df = _df(spark, _tonight_rows())
 
         def _files():
@@ -297,7 +282,7 @@ def test_pruned_store_read_partition_filters_in_plan(spark, tmp_path):
 
     root = str(tmp_path)
     docs = _df(spark, _base_corpus())
-    s0, store = f"{root}/s0", f"{root}/kept_store"
+    s0, store = LedgerState(f"{root}/state_ledger", 0), f"{root}/kept_store"
     init_state(spark, docs, s0)
     init_store(spark, docs, s0, store)
     ids = _df(spark, [(101, "x"), (105, "y")]).select("doc_id")

@@ -344,14 +344,14 @@ def test_refresh_recompute_is_corpus_independent(spark, tmp_path):
     corpus size. This is the structural form of the refresh promise
     (delta-proportional work), immune to wall-clock noise."""
     from radares_spark.pipeline.refresh import init_state, refresh
+    from radares_spark.pipeline.state_ledger import LedgerState
     from tests.test_refresh import mk_text
 
     footprints = []
     for scale, tag in ((1, "a"), (4, "b")):
         rows = [(i, mk_text(i)) for i in range(1000, 1000 + 30 * scale)]
         docs = spark.createDataFrame(rows, ["doc_id", "text"])
-        s0 = str(tmp_path / f"{tag}0")
-        s1 = str(tmp_path / f"{tag}1")
+        s0, s1 = (LedgerState(str(tmp_path / tag), e) for e in (0, 1))
         init_state(spark, docs, s0)
         night2 = [
             (i, t if i != 1001 else mk_text(5001)) for i, t in rows if i != 1002

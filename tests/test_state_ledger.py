@@ -7,13 +7,13 @@ Contracts pinned here:
 1. VIEW SEMANTICS — latest-per-doc over ``epoch <= e``: changed rows
    shadow older ones, tombstones delete, an untouched doc is carried
    by NOT being written (empty delta ⇒ no epoch partition).
-2. LAYOUT EQUIVALENCE — init_state + refresh against a LedgerState
-   produce row-for-row the same features/bands/audit views and the
-   same stats as the legacy dir layout, while the epoch partition
-   holds only the night's delta.
+2. FROM-SCRATCH EQUIVALENCE — each night's refreshed as-of view is
+   row-for-row the features/bands/audit a from-scratch init_state of
+   the same snapshot lands in a second ledger, while the epoch
+   partition holds only the night's delta.
 3. kept_churn FAST PATH — consecutive ledger epochs compute churn
    from the delta partitions; the three frames equal the generic
-   dir-layout computation.
+   computation over the from-scratch references.
 4. COMPACTION — folding completed epochs into ``epoch=-1`` preserves
    the as-of view, bounds retention, records a floor that rejects
    older as-of reads, and is superset-monotone (a crash that leaves
@@ -153,36 +153,38 @@ NIGHT2 = [r for r in NIGHT1 if r[0] != 1] + [(9, mk_text(9))]  # keeper 1 gone
 
 
 def _all_views(spark, state):
-    from radares_spark.pipeline.refresh import _state_read
-
     return {
-        "features": _rows(_state_read(spark, state, "features"), FEATURE_COLS),
+        "features": _rows(read_state(spark, state, "features"), FEATURE_COLS),
         "bands": _rows(
-            _state_read(spark, state, "bands"), ["doc_id", "band", "band_hash"]
+            read_state(spark, state, "bands"), ["doc_id", "band", "band_hash"]
         ),
-        "audit": _rows(_state_read(spark, state, "audit"), ["doc_id", "outcome"]),
+        "audit": _rows(read_state(spark, state, "audit"), ["doc_id", "outcome"]),
     }
 
 
 @pytest.mark.slow  # >=10 s in the r15 full-suite durations log
-def test_ledger_refresh_matches_dir_layout(spark, tmp_path):
+def test_ledger_refresh_matches_from_scratch_init(spark, tmp_path):
     led = str(tmp_path / "led")
-    d0, d1, d2 = (str(tmp_path / f"d{i}") for i in range(3))
-
-    init_state(spark, _df(spark, BASE), d0)
-    a1d, s1d = refresh(spark, _df(spark, NIGHT1), d0, d1)
-    a2d, s2d = refresh(spark, _df(spark, NIGHT2), d1, d2)
-
     L = [LedgerState(led, e) for e in range(3)]
     init_state(spark, _df(spark, BASE), L[0])
-    a1l, s1l = refresh(spark, _df(spark, NIGHT1), L[0], L[1])
-    a2l, s2l = refresh(spark, _df(spark, NIGHT2), L[1], L[2])
+    a1, _ = refresh(spark, _df(spark, NIGHT1), L[0], L[1])
+    a2, _ = refresh(spark, _df(spark, NIGHT2), L[1], L[2])
 
-    assert s1l == s1d and s2l == s2d
-    for dir_state, led_state in ((d0, L[0]), (d1, L[1]), (d2, L[2])):
-        assert _all_views(spark, led_state) == _all_views(spark, dir_state)
-    assert _rows(a1l, ["doc_id", "outcome"]) == _rows(a1d, ["doc_id", "outcome"])
-    assert _rows(a2l, ["doc_id", "outcome"]) == _rows(a2d, ["doc_id", "outcome"])
+    # reference: each night's snapshot batch-curated from scratch into
+    # its own ledger — the refreshed as-of views must equal it
+    ref = [LedgerState(str(tmp_path / f"ref{e}"), 0) for e in range(3)]
+    ref_audits = [
+        init_state(spark, _df(spark, snap), r)
+        for snap, r in zip((BASE, NIGHT1, NIGHT2), ref)
+    ]
+    for led_state, ref_state in zip(L, ref):
+        assert _all_views(spark, led_state) == _all_views(spark, ref_state)
+    assert _rows(a1, ["doc_id", "outcome"]) == _rows(
+        ref_audits[1], ["doc_id", "outcome"]
+    )
+    assert _rows(a2, ["doc_id", "outcome"]) == _rows(
+        ref_audits[2], ["doc_id", "outcome"]
+    )
 
     # the nightly write is the DELTA, not the corpus: night-1 features
     # epoch holds only the affected rows (5 rewritten, 7 removed
@@ -196,12 +198,13 @@ def test_ledger_refresh_matches_dir_layout(spark, tmp_path):
     # knobs land ONCE at the ledger root
     assert os.path.isdir(f"{led}/knobs")
 
-    # kept_churn fast path (consecutive epochs) == generic dir result
-    for (si, so), (li, lo) in (((d0, d1), (L[0], L[1])), ((d1, d2), (L[1], L[2]))):
+    # kept_churn fast path (consecutive epochs) == the generic path
+    # (non-consecutive states: two separate reference ledgers)
+    for i in (0, 1):
         gen = [sorted(r["doc_id"] for r in f.collect())
-               for f in kept_churn(spark, si, so)]
+               for f in kept_churn(spark, ref[i], ref[i + 1])]
         fast = [sorted(r["doc_id"] for r in f.collect())
-                for f in kept_churn(spark, li, lo)]
+                for f in kept_churn(spark, L[i], L[i + 1])]
         assert fast == gen
 
 
