@@ -26,9 +26,11 @@ from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from radares_spark.io import fs as iofs
 from radares_spark.io.fetcher import fetch_reports, login
 from radares_spark.pipeline.audit import TOTAL_EQUIP, completeness_audit
 from radares_spark.pipeline.backfill import backfill_plan
+from radares_spark.pipeline.ledger import recover_ledger
 from radares_spark.pipeline.run_log import append_run_log, fetch_run_log
 from radares_spark.pipeline.state_ledger import LedgerState
 from radares_spark.streaming.ingest_stream import run_ingest_stream
@@ -91,8 +93,6 @@ class _RootLease:
 
     def _beat(self, spark: SparkSession) -> None:
         import logging
-
-        from radares_spark.io import fs as iofs
 
         log = logging.getLogger(__name__)
         while not self._stop.wait(LEASE_HEARTBEAT_S):
@@ -169,8 +169,6 @@ class _RootLease:
         set ``lease_lost`` skips even the content read: the takeover
         owns the marker, and re-reading it here would reopen the
         read-then-delete window the flag exists to close."""
-        from radares_spark.io import fs as iofs
-
         self._stop.set()
         self._thread.join(timeout=30.0)
         if self.lease_lost.is_set():
@@ -243,8 +241,6 @@ def _acquire_root_lease(
     within one beat."""
     import time
 
-    from radares_spark.io import fs as iofs
-
     lease = os.path.join(root_dir, ROOT_LEASE)
     content = f"{owner}\n{_lease_nonce()}"
     for _attempt in range(2):
@@ -310,10 +306,6 @@ def parse_cli_date(s: str, today: dt.date | None = None) -> dt.date:
     return d
 
 
-def _ingest(spark: SparkSession, landing: str, warehouse: str, checkpoint: str) -> None:
-    run_ingest_stream(spark, landing, warehouse, checkpoint)
-
-
 def cmd_scrape(
     spark: SparkSession,
     http,
@@ -330,7 +322,7 @@ def cmd_scrape(
     day = day or (dt.date.today() - dt.timedelta(days=1))
     results = fetch_reports(http, report_url, [(e, day) for e in devices], landing)
     append_run_log(fetch_run_log(spark, results), warehouse)
-    _ingest(spark, landing, warehouse, checkpoint)
+    run_ingest_stream(spark, landing, warehouse, checkpoint)
 
 
 def cmd_backload(
@@ -349,9 +341,7 @@ def cmd_backload(
     number of work items fetched; a re-run over the same range is a
     no-op (plans empty)."""
     ledger_path = os.path.join(warehouse, "equipment_files")
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path(ledger_path)  # type: ignore[union-attr]
-    fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())  # type: ignore[union-attr]
-    if fs.exists(jvm_path):
+    if recover_ledger(spark, ledger_path):
         ledger = spark.read.parquet(ledger_path).select("pubdate", "equipment")
     else:
         ledger = spark.createDataFrame([], "pubdate date, equipment string")
@@ -362,7 +352,7 @@ def cmd_backload(
         return 0
     results = fetch_reports(http, report_url, work, landing)
     append_run_log(fetch_run_log(spark, results), warehouse)
-    _ingest(spark, landing, warehouse, checkpoint)
+    run_ingest_stream(spark, landing, warehouse, checkpoint)
     return len(work)
 
 
@@ -638,7 +628,6 @@ def cmd_crawl_nightly(
     overwrite, so every crash point reruns to the identical state."""
     from pyspark.sql import functions as F
 
-    from radares_spark.io import fs as iofs
     from radares_spark.operators.urls import incremental_url_dedup
     from radares_spark.pipeline.crawl import curate_crawl
 
@@ -938,8 +927,6 @@ def _corpus_nightly_run(
     ``already_completed`` and touches nothing."""
     from pyspark.sql import functions as F  # noqa: F401
 
-    from radares_spark.io import fs as iofs
-
     from radares_spark.pipeline.stores import resolve_store
 
     url_led = os.path.join(root_dir, "url_ledger")
@@ -1057,11 +1044,7 @@ def _corpus_nightly_run(
     # rewrite converges); pre-upgrade nights have no profile and
     # simply report no psi. --prune-nights keeps >= 1 completed night,
     # so the profile the NEXT night compares against always survives.
-    from radares_spark.operators.drift import (
-        crawl_profile,
-        profile_psi,
-        recap_profile_hosts,
-    )
+    from radares_spark.operators.drift import crawl_profile, profile_psi
 
     _check_root_lease(root_dir)  # next: profile write under out_dir
     profile_dir = os.path.join(out_dir, "drift_profile")
@@ -1077,14 +1060,9 @@ def _corpus_nightly_run(
             # produces structurally noisier terms than the token-bin
             # histogram, so one summed score would drown a real
             # tok_bin shift — an operator alerts per dimension
-            # the prior is re-capped through the same top-N+__other
-            # host fold tonight's profile was built with: a pre-cap
-            # prior (every host named) would otherwise spike the host
-            # PSI once on the first post-upgrade night; on an
-            # already-capped prior the re-cap is a no-op (r12 advice)
             per_dim = (
                 profile_psi(
-                    recap_profile_hosts(spark.read.parquet(prev_profile)),
+                    spark.read.parquet(prev_profile),
                     spark.read.parquet(profile_dir),
                 )
                 .groupBy("dim")
@@ -1380,7 +1358,6 @@ def _corpus_maintain_run(
     night's replay after a mid-crash compaction still converges — its
     URLs read as prior residents and the preserved-outputs path takes
     over — but the per-outcome counts it reports change)."""
-    from radares_spark.io import fs as iofs
     from radares_spark.pipeline.stores import (
         flip_stores,
         next_flip_index,
@@ -1594,7 +1571,6 @@ def _corpus_reinit_run(
     overwrite-idempotent); rerun to completion before the next night.
     Rerunning a COMPLETED reinit fails fast on the identical-knobs
     guard."""
-    from radares_spark.io import fs as iofs
     from radares_spark.pipeline.refresh import (
         init_ivf_from_state,
         init_postings_from_state,

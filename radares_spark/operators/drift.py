@@ -14,9 +14,11 @@ oracle, ``PSI_SQL`` below).
 
 Scale shape: one linear scan computing the cohort flag, ONE map-side-
 combined aggregate per dimension (shuffle keys = the low-cardinality
-bucket values), totals via a one-row broadcast cross join (the
-sanctioned grand-total idiom — kilobytes). Nothing is quadratic,
-nothing collects; at 100 TB the cost is the scan.
+bucket values). Every row lands in exactly one bucket per dim (the
+null bucket included), so each dim's bucket sums ARE the cohort
+totals: a window over the kilobyte bucket rows derives them, with no
+separate total aggregate and no cross join. Nothing is quadratic,
+nothing collects; at 100 TB the cost is one scan per dim.
 
 PSI convention: ``psi_term = (share_a - share_b) * ln(share_a /
 share_b)`` per bucket with shares clamped to ``PSI_MIN_SHARE`` so a
@@ -27,7 +29,7 @@ on the usual 0.1 / 0.25 thresholds.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from radares_spark.io.tables import load_table
@@ -41,160 +43,18 @@ PSI_VALUE_BIN_W = 50.0  # fixed-width bins over events.value (0..490)
 PSI_MIN_SHARE = 1e-6
 
 
-# Auto strategy cutover (r12 verdict #3): below this estimated input
-# size the k+1-scan default re-reads the page cache and measures
-# faster; above it the events are cold-scan-bound and one pass wins.
-# 32 GiB is conservative vs any realistic executor page cache — a
-# 100 TB events relation picks single-pass without the caller knowing
-# the knob exists. Module-level so deployments (and tests) can tune.
-PSI_SINGLE_PASS_MIN_BYTES = 32 << 30
-
-
-def _plan_size_bytes(df: DataFrame) -> int | None:
-    """Catalyst's estimated size of ``df``'s optimized plan (bytes) —
-    the same statistic the broadcast-join planner consults; None when
-    the JVM call fails OR the estimate is the unknown-size sentinel
-    (leaves without stats — e.g. in-memory test relations — report
-    ``spark.sql.defaultSizeInBytes`` = Long.MaxValue; treating that as
-    'huge' would mis-route tiny local frames to the one-pass plan)."""
-    try:
-        size = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:  # noqa: BLE001 — stats are advisory
-        return None
-    return None if size >= (1 << 62) else size
-
-
-def distribution_drift_psi(
-    events: DataFrame,
-    cohort_a,
-    dims: dict[str, "F.Column"],
-    single_pass: bool | None = None,
-) -> DataFrame:
-    """Per-bucket PSI between the ``cohort_a`` rows and the rest, for
-    each named dimension expression in ``dims`` (bucket expressions
-    are cast to string in BOTH strategies — pre-bin numerics into the
-    buckets you want, or accept their string rendering). Returns
-    ``(dim, bucket, n_a, n_b, share_a, share_b, psi_term)``.
-
-    Two physical strategies, row-identical output (pinned in tests);
-    the default ``single_pass=None`` picks one from Catalyst's
-    estimated input size (>= ``PSI_SINGLE_PASS_MIN_BYTES`` → one
-    pass), so the scale-safe plan is automatic at scale while the
-    measured-faster plan stays automatic at bench SF:
-
-    - ``single_pass=False``: one codegen'd groupBy per dim plus a
-      one-row broadcast grand total — k+1 passes over the events.
-      MEASURED faster at bench SF (0.15 s vs 0.36-0.54 s at sf0.1
-      for every one-pass variant tried: Generate/Expand pay per-row
-      while re-scans hit the page cache).
-    - ``single_pass=True``: each row explodes into one (dim, bucket)
-      struct per dim and ONE map-side-combined aggregate covers every
-      dim, with cohort totals derived from the kilobyte aggregate
-      (summing any one dim's buckets reproduces the cohort counts)
-      via a single-partition window over the bounded bucket rows.
-      The choice at 100 TB, where events dwarf any cache and k+1
-      cold scans ARE the cost.
-
-    Auto-pick caveat (r13 advice #4): inputs whose optimized plan
-    carries NO size statistic — RDD-backed / ``createDataFrame``
-    relations, JDBC sources, views without file stats — report
-    Catalyst's Long.MaxValue unknown-size sentinel, which the picker
-    deliberately treats as UNKNOWN, not huge, and keeps on the
-    multi-scan default (mis-routing tiny in-memory frames to the
-    one-pass plan would be the common failure). So "the scale-safe
-    plan needs no caller knob" holds for stats-bearing FILE sources;
-    callers feeding a genuinely large stats-less relation (e.g. a
-    huge JDBC extract) should pass ``single_pass=True`` explicitly.
-    """
-    if not dims:
-        raise ValueError("dims must be non-empty")
-    if single_pass is None:
-        size = _plan_size_bytes(events)
-        single_pass = size is not None and size >= PSI_SINGLE_PASS_MIN_BYTES
-    if single_pass:
-        return _psi_single_pass(events, cohort_a, dims)
-    flagged = events.select(
-        cohort_a.alias("__a"),
-        # same cast as _psi_single_pass — the two strategies must not
-        # diverge on non-string dims (r12 advice #4)
-        *[
-            expr.cast("string").alias(f"__dim_{name}")
-            for name, expr in dims.items()
-        ],
-    )
-    # totals are dimension-independent: every row lands in exactly one
-    # bucket per dim, so each dim's shares divide by the same pair of
-    # cohort row counts — computed once, broadcast as one row
-    tot = flagged.agg(
-        F.greatest(F.count(F.when(F.col("__a"), 1)), F.lit(1)).alias("__ta"),
-        F.greatest(F.count(F.when(~F.col("__a"), 1)), F.lit(1)).alias("__tb"),
-    )
-
-    def one(dim_name: str) -> DataFrame:
-        agg = (
-            flagged.groupBy(F.col(f"__dim_{dim_name}").alias("bucket"))
-            .agg(
-                F.count(F.when(F.col("__a"), 1)).alias("n_a"),
-                F.count(F.when(~F.col("__a"), 1)).alias("n_b"),
-            )
-            .crossJoin(F.broadcast(tot))
-        )
-        share_a = F.col("n_a") / F.col("__ta")
-        share_b = F.col("n_b") / F.col("__tb")
-        ca = F.greatest(share_a, F.lit(PSI_MIN_SHARE))
-        cb = F.greatest(share_b, F.lit(PSI_MIN_SHARE))
-        return agg.select(
-            F.lit(dim_name).alias("dim"),
-            "bucket",
-            "n_a",
-            "n_b",
-            F.round(share_a, 6).alias("share_a"),
-            F.round(share_b, 6).alias("share_b"),
-            F.round((ca - cb) * F.log(ca / cb), 6).alias("psi_term"),
-        )
-
-    out = None
-    for name in dims:
-        part = one(name)
-        out = part if out is None else out.unionByName(part)
-    return out
-
-
-def _psi_single_pass(
-    events: DataFrame, cohort_a, dims: dict[str, "F.Column"]
-) -> DataFrame:
-    """One-events-scan PSI (see :func:`distribution_drift_psi`)."""
-    from pyspark.sql import Window
-
-    pairs = F.array(
-        *[
-            F.struct(
-                F.lit(name).alias("dim"), expr.cast("string").alias("bucket")
-            )
-            for name, expr in dims.items()
-        ]
-    )
-    flagged = events.select(cohort_a.alias("__a"), F.explode(pairs).alias("__p"))
-    agg = flagged.groupBy(
-        F.col("__p.dim").alias("dim"), F.col("__p.bucket").alias("bucket")
-    ).agg(
-        F.count(F.when(F.col("__a"), 1)).alias("n_a"),
-        F.count(F.when(~F.col("__a"), 1)).alias("n_b"),
-    )
-    first_dim = next(iter(dims))
-    w = Window.partitionBy(F.lit(1)).rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    only_first = F.col("dim") == first_dim
-    tot_a = F.greatest(F.sum(F.when(only_first, F.col("n_a"))).over(w), F.lit(1))
-    tot_b = F.greatest(F.sum(F.when(only_first, F.col("n_b"))).over(w), F.lit(1))
-    share_a = F.col("n_a") / tot_a
-    share_b = F.col("n_b") / tot_b
+def _psi_terms(buckets: DataFrame) -> DataFrame:
+    """``(dim, bucket, n_a, n_b)`` bucket counts -> the same rows plus
+    ``share_a``, ``share_b`` and ``psi_term``. Shares divide by each
+    dim's own bucket sums (the cohort totals, floored at 1); the
+    ``PSI_MIN_SHARE`` clamp and 6-place rounding are applied here
+    only, for every PSI this module computes."""
+    per_dim = Window.partitionBy("dim")
+    share_a = F.col("n_a") / F.greatest(F.sum("n_a").over(per_dim), F.lit(1))
+    share_b = F.col("n_b") / F.greatest(F.sum("n_b").over(per_dim), F.lit(1))
     ca = F.greatest(share_a, F.lit(PSI_MIN_SHARE))
     cb = F.greatest(share_b, F.lit(PSI_MIN_SHARE))
-    return agg.select(
+    return buckets.select(
         "dim",
         "bucket",
         "n_a",
@@ -203,6 +63,42 @@ def _psi_single_pass(
         F.round(share_b, 6).alias("share_b"),
         F.round((ca - cb) * F.log(ca / cb), 6).alias("psi_term"),
     )
+
+
+def distribution_drift_psi(
+    events: DataFrame, cohort_a, dims: dict[str, "F.Column"]
+) -> DataFrame:
+    """Per-bucket PSI between the ``cohort_a`` rows and the rest, for
+    each named dimension expression in ``dims``. Bucket expressions
+    are cast to string: pre-bin numerics into the buckets you want,
+    or accept their string rendering. A null bucket value is a bucket
+    of its own and counts toward its dim's shares. Returns
+    ``(dim, bucket, n_a, n_b, share_a, share_b, psi_term)``.
+
+    Plan: one codegen'd groupBy per dim over the flagged events,
+    unioned, then :func:`_psi_terms` derives the cohort totals from
+    the bucket rows. The events are read once per dim; re-scans hit
+    the page cache at bench SF, where every one-pass variant measured
+    slower (Generate/Expand pay per row)."""
+    if not dims:
+        raise ValueError("dims must be non-empty")
+    flagged = events.select(
+        cohort_a.alias("__a"),
+        *[
+            expr.cast("string").alias(f"__dim_{name}")
+            for name, expr in dims.items()
+        ],
+    )
+    out = None
+    for name in dims:
+        part = flagged.groupBy(
+            F.lit(name).alias("dim"), F.col(f"__dim_{name}").alias("bucket")
+        ).agg(
+            F.count(F.when(F.col("__a"), 1)).alias("n_a"),
+            F.count(F.when(~F.col("__a"), 1)).alias("n_b"),
+        )
+        out = part if out is None else out.unionByName(part)
+    return _psi_terms(out)
 
 
 def events_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -274,8 +170,8 @@ DRIVER_SPECS: dict[str, QuerySpec] = {
         doc="Population stability index per event_type bucket and "
         f"fixed-width value bin (width {PSI_VALUE_BIN_W}) between the "
         "two halves of the event month; one map-side-combined "
-        "aggregate per dim + a one-row broadcast total, zero "
-        "collects.",
+        "aggregate per dim, cohort totals summed from the bucket "
+        "rows, zero collects.",
     ),
 }
 
@@ -355,65 +251,13 @@ def crawl_profile(docs: DataFrame) -> DataFrame:
     return out
 
 
-def recap_profile_hosts(profile: DataFrame) -> DataFrame:
-    """Re-apply the ``PROFILE_HOST_TOPN``+``__other`` host cap to a
-    STORED profile — the upgrade shim for roots whose previous night
-    predates the cap (r12 advice #3): an uncapped prior (every host
-    named) compared against tonight's capped profile leaves most host
-    buckets one-sided, each contributing a large clamp term — a
-    one-time spurious ``drift_psi_host_x1e6`` spike on the first
-    post-upgrade night. Capping the prior the same way removes the
-    artifact; on an ALREADY-capped profile this is a no-op
-    (``__other`` never competes for a named slot, so the kept set is
-    unchanged). Counts are conserved either way; non-host dims pass
-    through untouched. Profiles are kilobyte frames — driver-cheap."""
-    hosts = profile.filter(F.col("dim") == "host")
-    rest = profile.filter(F.col("dim") != "host")
-    top = (
-        hosts.filter(F.col("bucket") != "__other")
-        .orderBy(F.desc("n"), F.asc("bucket"))
-        .limit(PROFILE_HOST_TOPN)
-        .select("bucket", F.lit(True).alias("__top"))
-    )
-    capped = (
-        hosts.join(F.broadcast(top), "bucket", "left")
-        .withColumn(
-            "bucket",
-            F.when(F.col("__top"), F.col("bucket")).otherwise(F.lit("__other")),
-        )
-        .groupBy("dim", "bucket")
-        .agg(F.sum("n").alias("n"))
-    )
-    return rest.unionByName(capped.select("dim", "bucket", "n"))
-
-
 def profile_psi(prior: DataFrame, tonight: DataFrame) -> DataFrame:
     """Per-bucket PSI between two stored crawl profiles (already
     aggregated — kilobyte frames): full-outer join on (dim, bucket)
-    with zero-fill, shares within each dim's own cohort total, the
-    ``distribution_drift_psi`` clamp convention. Returns
+    with zero-fill, then the same shares and clamp as
+    :func:`distribution_drift_psi`. Returns
     ``(dim, bucket, n_a, n_b, share_a, share_b, psi_term)``."""
     a = prior.select("dim", "bucket", F.col("n").alias("n_a"))
     b = tonight.select("dim", "bucket", F.col("n").alias("n_b"))
-    j = (
-        a.join(b, ["dim", "bucket"], "full_outer")
-        .fillna(0, subset=["n_a", "n_b"])
-    )
-    tot = j.groupBy("dim").agg(
-        F.greatest(F.sum("n_a"), F.lit(1)).alias("__ta"),
-        F.greatest(F.sum("n_b"), F.lit(1)).alias("__tb"),
-    )
-    j = j.join(F.broadcast(tot), "dim")
-    share_a = F.col("n_a") / F.col("__ta")
-    share_b = F.col("n_b") / F.col("__tb")
-    ca = F.greatest(share_a, F.lit(PSI_MIN_SHARE))
-    cb = F.greatest(share_b, F.lit(PSI_MIN_SHARE))
-    return j.select(
-        "dim",
-        "bucket",
-        "n_a",
-        "n_b",
-        F.round(share_a, 6).alias("share_a"),
-        F.round(share_b, 6).alias("share_b"),
-        F.round((ca - cb) * F.log(ca / cb), 6).alias("psi_term"),
-    )
+    j = a.join(b, ["dim", "bucket"], "full_outer").fillna(0, subset=["n_a", "n_b"])
+    return _psi_terms(j)

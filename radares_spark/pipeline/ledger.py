@@ -23,6 +23,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from radares_spark.io import fs as iofs
+
 NATURAL_KEY = ["pubdate", "equipment"]
 
 
@@ -70,9 +72,7 @@ def idempotent_append(
     # reference enforces with a DB index (schema.sql:31-33). Only a
     # genuinely missing ledger path skips the anti-join; every other
     # error propagates and fails the ingest.
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path(ledger_path)  # type: ignore[union-attr]
-    fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())  # type: ignore[union-attr]
-    if fs.exists(jvm_path):
+    if recover_ledger(spark, ledger_path):
         existing = spark.read.parquet(ledger_path).select(*NATURAL_KEY)
         before = flows.select(*NATURAL_KEY).distinct()
         new_keys = before.join(existing, NATURAL_KEY, "left_anti")
@@ -124,17 +124,13 @@ def merge_flows(spark: SparkSession, updates: DataFrame, warehouse: str) -> int:
     merged = kept.unionByName(stamped)
     n = merged.count()
 
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        # merged reads flows_path too (via ``kept``) — same guard
-        merged.localCheckpoint(eager=True).write.mode("overwrite").partitionBy(
-            "pubdate"
-        ).parquet(flows_path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    # merged reads flows_path too (via ``kept``) — same guard
+    merged.localCheckpoint(eager=True).write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("pubdate").parquet(flows_path)
 
     # ledger gains any genuinely new natural keys (idempotent)
+    recover_ledger(spark, ledger_path)
     new_keys = (
         stamped.select(*NATURAL_KEY)
         .distinct()
@@ -159,14 +155,9 @@ def compact_partitions(
     """
     df = spark.read.parquet(path)
     n_parts = df.select(partition_col).distinct().count()
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        df.repartition(F.col(partition_col)).localCheckpoint(eager=True).write.mode(
-            "overwrite"
-        ).partitionBy(partition_col).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    df.repartition(F.col(partition_col)).localCheckpoint(eager=True).write.mode(
+        "overwrite"
+    ).option("partitionOverwriteMode", "dynamic").partitionBy(partition_col).parquet(path)
     return n_parts
 
 
@@ -177,16 +168,90 @@ def reingest_overwrite(spark: SparkSession, flows: DataFrame, warehouse: str) ->
     its fix for a bad day is manual DELETE + re-run. Partitions not in
     the input are untouched, so a repair of one day never rewrites the
     other ~3650 days of a 10-year fact table.
+
+    The touched days' ledger keys then follow the repaired keys: a
+    device the repair dropped loses its row (so the audit and the
+    backfill planner list it as missing again), a device it added
+    gains one (so a later append of it is skipped), and a device kept
+    keeps its row and ``date_created``. Additions alone are a plain
+    append; only a drop rewrites the ledger (:func:`_swap_ledger`).
+    A crash after the flows write leaves the old ledger keys; rerun
+    the repair.
     """
     flows_path = os.path.join(warehouse, "flows")
+    ledger_path = os.path.join(warehouse, "equipment_files")
+    # ``flows`` may be read from flows_path (read, fix, write back):
+    # materialize it before the overwrite, as merge_flows does
     stamped = flows.withColumn(
         "equipment_files_id", file_id(F.col("pubdate"), F.col("equipment"))
-    )
+    ).localCheckpoint(eager=True)
     n = stamped.count()
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        stamped.write.mode("overwrite").partitionBy("pubdate").parquet(flows_path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    stamped.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("pubdate").parquet(flows_path)
+
+    keys = stamped.select(*NATURAL_KEY).distinct()
+    if not recover_ledger(spark, ledger_path):
+        build_ledger(keys).write.mode("append").parquet(ledger_path)
+        return n
+    ledger = spark.read.parquet(ledger_path)
+    dropped = (
+        ledger.select(*NATURAL_KEY)
+        .join(F.broadcast(keys.select("pubdate").distinct()), "pubdate", "left_semi")
+        .join(keys, NATURAL_KEY, "left_anti")
+    )
+    added = build_ledger(keys.join(ledger.select(*NATURAL_KEY), NATURAL_KEY, "left_anti"))
+    if dropped.isEmpty():
+        added.write.mode("append").parquet(ledger_path)
+    else:
+        _swap_ledger(
+            spark,
+            ledger_path,
+            ledger.join(F.broadcast(dropped), NATURAL_KEY, "left_anti").unionByName(added),
+        )
     return n
+
+
+# Siblings of a ledger being rewritten: the new copy is STAGED beside
+# it, the old one RETIRED to a second name, then the staged copy takes
+# the ledger's name.
+STAGED, RETIRED = ".rewrite", ".retired"
+
+
+def _swap_ledger(spark: SparkSession, ledger_path: str, rows: DataFrame) -> None:
+    """Replace the ledger with ``rows`` (which may read it) in three
+    steps: write ``rows`` to the staged sibling, rename the ledger to
+    the retired sibling, rename the staged copy into place, then drop
+    the retired copy. Renames are atomic on HDFS and local disk, so a
+    crash leaves either the ledger or a complete staged or retired
+    copy, and :func:`recover_ledger` puts one back before the next
+    write reads the ledger. (On object stores a rename is a copy;
+    the window is that copy.)"""
+    staged, retired = ledger_path + STAGED, ledger_path + RETIRED
+    # fully written before the ledger it reads moves away
+    rows.write.mode("overwrite").parquet(staged)
+    iofs.rename(spark, ledger_path, retired)
+    iofs.rename(spark, staged, ledger_path)
+    iofs.delete(spark, retired)
+
+
+def recover_ledger(spark: SparkSession, ledger_path: str) -> bool:
+    """Finish or undo a :func:`_swap_ledger` a crash cut short, and
+    return whether the ledger exists. Every ledger writer calls this
+    before it reads the ledger: a missing ledger would read as a first
+    write and re-append every group, breaking the unique
+    (pubdate, equipment) guarantee. A staged copy without a ledger is
+    complete (the ledger is only moved after the staged write), so it
+    wins over the retired one; with the ledger present, both siblings
+    are leftovers. One directory listing when nothing is left over.
+    Assumes one writer per warehouse, as the ingest does."""
+    parent, name = os.path.split(ledger_path)
+    present = set(iofs.list_names(spark, parent))
+    leftovers = [ledger_path + s for s in (STAGED, RETIRED) if name + s in present]
+    if name not in present:
+        if not leftovers:
+            return False
+        iofs.rename(spark, leftovers.pop(0), ledger_path)
+    for path in leftovers:
+        iofs.delete(spark, path)
+    return True

@@ -285,30 +285,6 @@ def test_crawl_profile_host_tail_lumps_to_other(spark):
     assert got == {"big.com": 2, "mid.com": 2, "__other": 3}
 
 
-def test_psi_single_pass_row_identical(spark):
-    """single_pass=True (the 100 TB one-events-scan strategy: explode
-    to (dim,bucket) structs, one aggregate, totals derived from the
-    kilobyte aggregate) must be ROW-IDENTICAL to the default multi-
-    scan strategy — and its plan must really read events once."""
-    rows = (
-        [("a", "x")] * 3 + [("a", "y")] * 2 + [("a", None)]
-        + [("b", "x")] + [("b", "y")] * 4 + [("b", "z")] * 2
-    )
-    kw = dict(cohort_a=F.col("grp") == "a", dims={"cat": F.col("cat"),
-              "grp2": F.concat(F.lit("g_"), F.col("grp"))})
-    default = sorted(
-        (tuple(r) for r in distribution_drift_psi(_events(spark, rows), **kw).collect()),
-        key=repr,  # None buckets have no natural order vs str
-    )
-    single = distribution_drift_psi(_events(spark, rows), single_pass=True, **kw)
-    assert sorted((tuple(r) for r in single.collect()), key=repr) == default
-    # post-execution the AQE plan prints Final + Initial sections;
-    # count the source scan in the final plan only
-    plan = single._jdf.queryExecution().executedPlan().toString()
-    final = plan.split("== Initial Plan ==")[0]
-    assert final.count("Scan ExistingRDD") == 1  # one pass over the events
-
-
 def test_distribution_drift_psi_empty_dims_raises(spark):
     with pytest.raises(ValueError, match="dims must be non-empty"):
         distribution_drift_psi(
@@ -340,141 +316,42 @@ def test_profile_psi_identical_zero_and_shift(spark):
     assert out[("host", "a")]["psi_term"] == 0.0  # its own dim is unmoved
 
 
-def test_psi_auto_strategy_picks_by_size(spark, monkeypatch, tmp_path):
-    """single_pass=None (the default) picks the physical strategy from
-    Catalyst's estimated input size (r12 verdict #3): input below the
-    PSI_SINGLE_PASS_MIN_BYTES cutover (and input with UNKNOWN stats —
-    the Long.MaxValue sentinel) runs the measured-faster multi-scan
-    plan; input past the cutover runs the one-events-scan plan — the
-    100 TB-safe path is automatic, no caller knob required. Rows are
-    identical either way (the single-pass equivalence test pins the
-    values; here we pin the SELECTION)."""
-    from radares_spark.operators import drift
-
-    rows = [("a", "x")] * 3 + [("a", "y")] + [("b", "x")] + [("b", "y")] * 2
-    kw = dict(
-        cohort_a=F.col("grp") == "a",
-        dims={"cat": F.col("cat"),
-              "grp2": F.concat(F.lit("g_"), F.col("grp"))},
+def test_psi_single_path_plan_and_null_bucket(spark, tmp_path):
+    """Parquet-backed events, two dims, a null bucket: the plan reads
+    the source once per dim and has no nested-loop join (cohort totals
+    come from each dim's bucket sums, not a broadcast cross join); the
+    null bucket's rows count toward its dim's shares; a non-string dim
+    buckets as strings."""
+    rows = (
+        [("a", "x")] * 3 + [("a", "yy")] * 2 + [("a", None)]
+        + [("b", "x")] + [("b", "yy")] * 4 + [("b", "zzz")] * 2
     )
-    # parquet-backed so Catalyst has a REAL size estimate (in-memory
-    # relations report the unknown sentinel and must stay multi-scan)
     p = str(tmp_path / "ev.parquet")
     _events(spark, rows).write.parquet(p)
-    ev = spark.read.parquet(p)
-
-    def n_scans(df):
-        df.collect()
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        return plan.split("== Initial Plan ==")[0].count("Scan parquet")
-
-    small = distribution_drift_psi(ev, **kw)
-    assert n_scans(small) > 1  # auto -> multi-scan below the cutover
-    monkeypatch.setattr(drift, "PSI_SINGLE_PASS_MIN_BYTES", 0)
-    large = distribution_drift_psi(ev, **kw)
-    assert n_scans(large) == 1  # auto -> one events pass past it
-    assert sorted((tuple(r) for r in large.collect()), key=repr) == sorted(
-        (tuple(r) for r in small.collect()), key=repr
-    )
-    # unknown stats (the in-memory sentinel) stay on the default even
-    # with the cutover forced to zero
-    mem = distribution_drift_psi(_events(spark, rows), **kw)
-    assert n_scans(mem) == 0  # no parquet scan; and...
-    plan = mem._jdf.queryExecution().executedPlan().toString()
-    assert plan.split("== Initial Plan ==")[0].count("Scan ExistingRDD") > 1
-
-
-def test_psi_strategies_agree_on_nonstring_dims(spark):
-    """A non-string dim expression buckets IDENTICALLY in both
-    strategies (r12 advice #4): both cast the dim to string, so the
-    advertised row-identical guarantee holds beyond the docstring's
-    strings-only contract."""
-    rows = [("a", "xx"), ("a", "yyy"), ("b", "xx"), ("b", "z")]
-    kw = dict(
+    out = distribution_drift_psi(
+        spark.read.parquet(p),
         cohort_a=F.col("grp") == "a",
-        dims={"cat_len": F.length(F.col("cat"))},  # int-typed dim
+        dims={"cat": F.col("cat"), "cat_len": F.length(F.col("cat"))},
     )
-    default = distribution_drift_psi(
-        _events(spark, rows), single_pass=False, **kw
-    )
-    single = distribution_drift_psi(
-        _events(spark, rows), single_pass=True, **kw
-    )
-    assert dict(default.dtypes)["bucket"] == "string"
-    assert dict(single.dtypes)["bucket"] == "string"
-    assert sorted((tuple(r) for r in default.collect()), key=repr) == sorted(
-        (tuple(r) for r in single.collect()), key=repr
-    )
-
-
-def test_recap_profile_hosts_cures_uncapped_prior(spark):
-    """r12 advice #3: the first cross-night PSI after the host-cap
-    upgrade compares an UNCAPPED previous profile (every host named)
-    against tonight's capped top-N+__other — most host buckets land
-    one-sided and the host PSI spikes once, purely as an upgrade
-    artifact. recap_profile_hosts folds the prior through the same
-    cap: counts conserved, idempotent on already-capped profiles, and
-    the identical-distribution PSI returns to ~0."""
-    from radares_spark.operators import drift
-    from radares_spark.operators.drift import (
-        crawl_profile,
-        profile_psi,
-        recap_profile_hosts,
-    )
-
-    monkey_n = 2
-    old = drift.PROFILE_HOST_TOPN
-    drift.PROFILE_HOST_TOPN = monkey_n
-    try:
-        # the same crawl distribution two nights running: 2 big hosts
-        # + a 3-host tail, one doc each tail host
-        docs = spark.createDataFrame(
-            [
-                (1, "http://big.com/a", "x"), (2, "http://big.com/b", "x"),
-                (3, "http://mid.com/a", "x"), (4, "http://mid.com/b", "x"),
-                (5, "http://t1.com/a", "x"), (6, "http://t2.com/a", "x"),
-                (7, "http://t3.com/a", "x"),
-            ],
-            "doc_id long, url string, text string",
-        )
-        tonight = crawl_profile(docs)  # capped: big, mid, __other
-        # the PRE-upgrade prior: every host named (what an old night
-        # persisted)
-        prior_uncapped = spark.createDataFrame(
-            [("host", h, n) for h, n in
-             [("big.com", 2), ("mid.com", 2), ("t1.com", 1),
-              ("t2.com", 1), ("t3.com", 1)]]
-            + [("tok_bin", "tok_0", 7)],
-            "dim string, bucket string, n long",
-        )
-        # uncapped vs capped: the upgrade artifact — a one-sided spike
-        raw = sum(
-            r["psi_term"]
-            for r in profile_psi(prior_uncapped, tonight).collect()
-            if r["dim"] == "host"
-        )
-        assert raw > 0.5
-        # re-capped prior vs capped tonight: identical distribution,
-        # PSI vanishes
-        fixed = profile_psi(recap_profile_hosts(prior_uncapped), tonight)
-        host_terms = [
-            r["psi_term"] for r in fixed.collect() if r["dim"] == "host"
-        ]
-        assert host_terms and all(abs(t) < 1e-9 for t in host_terms)
-        # counts conserved through the re-cap
-        recapped = recap_profile_hosts(prior_uncapped)
-        tot = recapped.filter(F.col("dim") == "host").agg(
-            F.sum("n")
-        ).collect()[0][0]
-        assert tot == 7
-        # idempotent on an already-capped profile (__other never
-        # competes for a named slot)
-        once = sorted(tuple(r) for r in recapped.collect())
-        twice = sorted(
-            tuple(r) for r in recap_profile_hosts(recapped).collect()
-        )
-        assert once == twice
-        # non-host dims pass through untouched
-        assert ("tok_bin", "tok_0", 7) in once
-    finally:
-        drift.PROFILE_HOST_TOPN = old
+    assert dict(out.dtypes)["bucket"] == "string"
+    got = {(r["dim"], r["bucket"]): r for r in out.collect()}
+    assert set(got) == {
+        ("cat", "x"), ("cat", "yy"), ("cat", "zzz"), ("cat", None),
+        ("cat_len", "1"), ("cat_len", "2"), ("cat_len", "3"), ("cat_len", None),
+    }
+    # 6 cohort-A rows, one of them null: x's share is 3/6, not 3/5
+    assert got[("cat", "x")]["share_a"] == 0.5
+    assert got[("cat", None)]["n_a"] == 1
+    assert got[("cat", None)]["share_a"] == round(1 / 6, 6)
+    for dim in ("cat", "cat_len"):
+        terms = [r for (d, _), r in got.items() if d == dim]
+        assert sum(r["share_a"] for r in terms) == pytest.approx(1.0, abs=1e-5)
+        assert sum(r["share_b"] for r in terms) == pytest.approx(1.0, abs=1e-5)
+    assert tuple(got[("cat_len", "1")])[2:] == tuple(got[("cat", "x")])[2:]
+    # post-execution the AQE plan prints Final + Initial sections;
+    # count the source scans in the final plan only
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("Scan parquet") == 2  # once per dim
+    assert "BroadcastNestedLoopJoin" not in final
+    assert "CartesianProduct" not in final

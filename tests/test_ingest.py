@@ -15,6 +15,7 @@ from radares_spark.io.ingest import clean_flows, parse_reports, quarantined
 from radares_spark.io.report_parser import build_bad_report, build_report
 from radares_spark.pipeline.audit import completeness_audit
 from radares_spark.pipeline.backfill import backfill_plan
+from radares_spark.pipeline import ledger as ledger_mod
 from radares_spark.pipeline.ledger import (
     compact_partitions,
     idempotent_append,
@@ -81,7 +82,8 @@ def test_idempotent_append(spark, landing, tmp_path):
 
 def test_reingest_overwrites_only_touched_partitions(spark, landing, tmp_path):
     """Repair path: dynamic partition overwrite replaces ONLY the
-    pubdates present in the corrected input (ledger.reingest_overwrite)."""
+    pubdates present in the corrected input (ledger.reingest_overwrite),
+    and the touched days' ledger rows follow the rewritten flows."""
     wh = str(tmp_path / "warehouse")
     flows = clean_flows(parse_reports(spark, landing))
     idempotent_append(spark, flows, wh)
@@ -89,6 +91,16 @@ def test_reingest_overwrites_only_touched_partitions(spark, landing, tmp_path):
         spark.read.parquet(f"{wh}/flows").filter(F.col("pubdate") == str(DATES[0])).count()
     )
 
+    def kept_row():
+        # the ledger row of the device every repair below keeps
+        return (
+            spark.read.parquet(f"{wh}/equipment_files")
+            .filter((F.col("pubdate") == str(DATES[1])) & (F.col("equipment") == EQUIPS[0]))
+            .select("id", "date_created")
+            .collect()
+        )
+
+    original = kept_row()
     # "corrected" day-2 data: only one device's report survives review
     fixed = flows.filter(
         (F.col("pubdate") == str(DATES[1])) & (F.col("equipment") == EQUIPS[0])
@@ -101,6 +113,84 @@ def test_reingest_overwrites_only_touched_partitions(spark, landing, tmp_path):
     assert stored.filter(F.col("pubdate") == str(DATES[1])).count() == 96
     # ...day 1 untouched
     assert stored.filter(F.col("pubdate") == str(DATES[0])).count() == before_day1
+
+    def keys(df, day):
+        return {
+            tuple(r)
+            for r in df.filter(F.col("pubdate") == str(day))
+            .select("pubdate", "equipment")
+            .distinct()
+            .collect()
+        }
+
+    def ledger_matches_flows():
+        ledger = spark.read.parquet(f"{wh}/equipment_files")
+        flows_now = spark.read.parquet(f"{wh}/flows")
+        for day in DATES:
+            assert keys(ledger, day) == keys(flows_now, day), day
+        assert ledger.count() == ledger.select("pubdate", "equipment").distinct().count()
+
+    # the devices the repair dropped lost their ledger rows, so the
+    # audit lists them as missing again
+    ledger_matches_flows()
+    assert len(keys(spark.read.parquet(f"{wh}/equipment_files"), DATES[1])) == 1
+
+    # a repair that adds a device ledgers it: a later append skips it
+    added = fixed.withColumn("equipment", F.lit("FS999JOI"))
+    reingest_overwrite(spark, fixed.unionByName(added), wh)
+    ledger_matches_flows()
+    assert idempotent_append(spark, added, wh) == (0, 1)
+    # a device both repairs kept keeps its original ledger row
+    assert kept_row() == original
+
+
+def test_ledger_swap_crash_recovers(spark, landing, tmp_path, monkeypatch):
+    """A repair killed between moving the old ledger away and renaming
+    the rewritten one into place leaves no ``equipment_files``. The
+    next write must put the staged copy back, not read the missing
+    ledger as a first write and append every group again."""
+    wh = str(tmp_path / "warehouse")
+    flows = clean_flows(parse_reports(spark, landing))
+    idempotent_append(spark, flows, wh)
+    fixed = flows.filter(
+        (F.col("pubdate") == str(DATES[1])) & (F.col("equipment") == EQUIPS[0])
+    )
+
+    rename = ledger_mod.iofs.rename
+
+    def crash_on_staged(spark_, src, dst):
+        if src.endswith(ledger_mod.STAGED):
+            raise OSError("killed")
+        rename(spark_, src, dst)
+
+    monkeypatch.setattr(ledger_mod.iofs, "rename", crash_on_staged)
+    with pytest.raises(OSError, match="killed"):
+        reingest_overwrite(spark, fixed, wh)
+    monkeypatch.undo()
+    left = {p.name for p in Path(wh).iterdir()}
+    assert "equipment_files" not in left and "equipment_files.rewrite" in left
+
+    # day 1's three devices and the repaired day 2 device are ledgered
+    # and skipped; the two devices the repair dropped are appended
+    assert idempotent_append(spark, flows, wh) == (192 + 192, 4)
+    left = {p.name for p in Path(wh).iterdir()}
+    assert not {n for n in left if n.startswith("equipment_files.")}
+    ledger = spark.read.parquet(f"{wh}/equipment_files")
+    assert ledger.count() == len(EQUIPS) * len(DATES)
+    assert ledger.select("pubdate", "equipment").distinct().count() == ledger.count()
+
+    # a rerun of the crashed repair keeps every other day's rows
+    monkeypatch.setattr(ledger_mod.iofs, "rename", crash_on_staged)
+    with pytest.raises(OSError, match="killed"):
+        reingest_overwrite(spark, fixed, wh)
+    monkeypatch.undo()
+    reingest_overwrite(spark, fixed, wh)
+    ledger = spark.read.parquet(f"{wh}/equipment_files")
+    day1 = ledger.filter(F.col("pubdate") == str(DATES[0]))
+    assert {r["equipment"] for r in day1.collect()} == set(EQUIPS)
+    assert [r["equipment"] for r in ledger.filter(F.col("pubdate") == str(DATES[1])).collect()] == [
+        EQUIPS[0]
+    ]
 
 
 def test_merge_flows_upserts_groups(spark, landing, tmp_path):

@@ -42,10 +42,6 @@ SANCTIONED_NESTED_LOOP = {
     # (operators/dsir.py:567,654)
     "corpus_kn_trigram_logprob",
     "corpus_kn_bigram_logprob",
-    # r12 rotation: PSI shares divide every bucket row by the SAME
-    # one-row pair of cohort totals — the sanctioned one-row broadcast
-    # grand-total cross join (operators/drift.py)
-    "events_drift_psi",
 }
 
 
